@@ -159,9 +159,7 @@ class SnapshotStore:
         cached = self._schema_cache
         if cached is not None and cached[0] == v:
             return cached[1]
-        sch = self.read(v).schema
-        self._schema_cache = (v, sch)
-        return sch
+        return self.read(v).schema  # read() fills the cache
 
     def _check_schema(self, rows: DataFrame) -> None:
         """Strict mode fails FAST on column drift — mor would otherwise
@@ -571,7 +569,8 @@ class SnapshotStore:
         return freed
 
     def _commit(
-        self, df: DataFrame, meta: dict | None = None, base_version: int | None = None
+        self, df: DataFrame, meta: dict | None = None, base_version: int | None = None,
+        schema_from: int | None = None,
     ) -> int:
         """C5 — flush/persist barrier (``collection.flush()``,
         ``Milvus/stream1.py:226``): write the new snapshot fully, then
@@ -583,7 +582,11 @@ class SnapshotStore:
         published after our read, base+1 is already claimed and we raise
         instead of committing a snapshot derived from stale state — the
         anti-join/dedup/merge inside the mutation would otherwise
-        silently drop the concurrent writer's rows."""
+        silently drop the concurrent writer's rows.
+
+        ``schema_from``: the base version of a commit that keeps the
+        table schema — the schema cache moves to the new version (see
+        :meth:`_carry_schema`)."""
         version = (
             base_version + 1 if base_version is not None else self.current_version() + 1
         )
@@ -627,6 +630,7 @@ class SnapshotStore:
                 f,
             )
         os.replace(tmp, self._pointer)
+        self._carry_schema(schema_from, version)
         return version
 
     # -- merge-on-read manifest bookkeeping ---------------------------------
@@ -646,6 +650,7 @@ class SnapshotStore:
         version: int | None = None,
         rows: int | None = None,
         cluster_counts: dict | None = None,
+        schema_from: int | None = None,
     ) -> int:
         """C5 barrier, mor flavor: the new segment/tombstone files are
         fully written before the manifest that references them appears;
@@ -664,7 +669,10 @@ class SnapshotStore:
         no-shadowing guarantee; the relayout upsert knows its own moved
         deltas). Stamped with the ``v<version>`` token — mutations that
         CANNOT know them (delete/update/plain upsert) pass None and the
-        carried-forward token goes stale, reading as absent."""
+        carried-forward token goes stale, reading as absent.
+
+        ``schema_from``: as in :meth:`_commit`; carried before any
+        auto-compaction, which then reads the new version with it."""
         if version is None:  # legacy single-writer path
             version = self.current_version() + 1
             self._claim_version(version)
@@ -689,6 +697,7 @@ class SnapshotStore:
                 f,
             )
         os.replace(tmp, self._pointer)
+        self._carry_schema(schema_from, version)
         if self.compact_when is not None and (
             len(segments) + len(tombstones) > self.compact_when
         ):
@@ -917,10 +926,19 @@ class SnapshotStore:
         v = self.current_version() if version is None else version
         if v == 0:
             raise ValueError(f"snapshot store {self.root} is empty")
+        schema = self._strict_schema(v)
         if self.mode == "cow":
-            return self._read_seg(self._snapshot_path(v), self._strict_schema())
-        m = self._read_manifest(v)
-        return self._merge_files(m["segments"], m["tombstones"])
+            df = self._read_seg(self._snapshot_path(v), schema)
+        else:
+            m = self._read_manifest(v)
+            df = self._merge_files(m["segments"], m["tombstones"], schema)
+        cached = self._schema_cache
+        if schema is None and (cached is None or cached[0] < v):
+            # first read of this version: its inferred schema serves the
+            # later reads of it. The slot only moves forward, so a
+            # time-travel read does not evict the current version.
+            self._schema_cache = (v, df.schema)
+        return df
 
     @staticmethod
     def _zone_hits(entries: list[dict], lo, hi) -> list[dict]:
@@ -953,7 +971,7 @@ class SnapshotStore:
         tombs = self._zone_hits(m["tombstones"], lo, hi)
         if not segs:
             return self.read(version).filter(rng).limit(0)  # typed empty
-        return self._merge_files(segs, tombs).filter(rng)
+        return self._merge_files(segs, tombs, self._strict_schema(v)).filter(rng)
 
     def read_where_key_in(self, keys: list, version: int | None = None) -> DataFrame:
         """Point-set read with manifest-level skipping, two layers deep:
@@ -995,7 +1013,7 @@ class SnapshotStore:
             tombs = self._bloom_keep(tombs, hashes)
         if not segs:
             return self.read(version).filter(pred).limit(0)
-        return self._merge_files(segs, tombs).filter(pred)
+        return self._merge_files(segs, tombs, self._strict_schema(v)).filter(pred)
 
     def read_where_between(self, col: str, lo, hi, version: int | None = None) -> DataFrame:
         """Data skipping on a NON-KEY predicate column: segments whose
@@ -1050,22 +1068,42 @@ class SnapshotStore:
         kept = [e for e in segs if not (value_misses(e) and not may_shadow(e))]
         if not kept:
             return self.read(version).filter(pred).limit(0)
-        return self._merge_files(kept, m["tombstones"]).filter(pred)
+        return self._merge_files(kept, m["tombstones"], self._strict_schema(v)).filter(pred)
 
-    def _strict_schema(self):
-        """The table schema for EXPLICIT-schema segment reads, or None.
-        Every schema-less ``spark.read.parquet`` pays a schema-inference
-        JOB, and a fragmented mor read builds one reader per live file
-        set — O(files) driver jobs per plan construction (r14). In
-        strict mode (no schema_evolution) every segment carries the
-        table schema by the _check_schema contract and the schema is
-        version-invariant, so one cached inference serves every read;
-        create/drop/replace (the operations that can establish a new
-        schema) invalidate. Under schema_evolution segments genuinely
-        differ — always infer there."""
+    def _strict_schema(self, version: int):
+        """The table schema of ``version`` for EXPLICIT-schema segment
+        reads, or None. Every schema-less ``spark.read.parquet`` pays a
+        schema-inference JOB, and a fragmented mor read builds one reader
+        per live file set — O(files) driver jobs per plan construction
+        (r14). In strict mode (no schema_evolution) every segment of a
+        version carries that version's schema by the _check_schema
+        contract, so the cached inference serves its reads — but only
+        when the cache holds exactly this version: a replace (this
+        instance's or a sibling's) can publish a new schema, and reading
+        one version with another's schema returns silent nulls. The
+        cache is filled by the first read of a version, carried forward
+        by the schema-checked commits (:meth:`_carry_schema`) and
+        cleared by create/drop/replace. Under schema_evolution segments
+        genuinely differ — always infer there."""
         if self.schema_evolution:
             return None
-        return self._schema_cache[1] if self._schema_cache is not None else None
+        cached = self._schema_cache
+        return cached[1] if cached is not None and cached[0] == version else None
+
+    def _carry_schema(self, base_version: int | None, version: int) -> None:
+        """Move the schema cache from the version a commit read to the
+        version it published. Only for commits that cannot change the
+        schema (insert/update/upsert pass _check_schema, delete and
+        compact rewrite existing rows); a commit whose base is not the
+        cached version leaves the cache alone."""
+        cached = self._schema_cache
+        if (
+            not self.schema_evolution
+            and base_version is not None
+            and cached is not None
+            and cached[0] == base_version
+        ):
+            self._schema_cache = (version, cached[1])
 
     def _read_seg(self, path: str, schema):
         r = self.spark.read
@@ -1073,8 +1111,7 @@ class SnapshotStore:
             r = r.schema(schema)
         return r.parquet(path)
 
-    def _merge_files(self, segs: list[dict], tombs: list[dict]) -> DataFrame:
-        dschema = self._strict_schema()
+    def _merge_files(self, segs: list[dict], tombs: list[dict], dschema) -> DataFrame:
         if len(segs) == 1 and not tombs:  # compacted fast path: plain scan
             return self._read_seg(os.path.join(self.root, segs[0]["path"]), dschema)
         data = None
@@ -1243,11 +1280,13 @@ class SnapshotStore:
                 # rows, so the gauge goes unknown instead of wrong.
                 rows=prev + cnt if (prev is not None and dedup_new) else None,
                 cluster_counts=merged_cc,
+                schema_from=base_v,
             )
         # cow rewrites the snapshot either way; assume_new only spares it
         # the anti-join, not the O(corpus) union write
         return self._commit(
-            self._union(self.read(base_v), new), meta=meta, base_version=base_v
+            self._union(self.read(base_v), new), meta=meta, base_version=base_v,
+            schema_from=base_v,
         )
 
     def delete_ids(self, ids: DataFrame | list) -> int:
@@ -1280,6 +1319,7 @@ class SnapshotStore:
                 m["tombstones"] + [self._entry(tomb, v, tmn, tmx, rows=tcnt)],
                 meta=meta,
                 version=v,
+                schema_from=base_v,
             )
         # no broadcast hint: id-list deletes are tiny and AQE broadcasts
         # them at runtime anyway, but a delete-by-dataframe at 100 TB
@@ -1289,6 +1329,7 @@ class SnapshotStore:
             base.join(keys, on=self.key, how="left_anti"),
             meta=meta,
             base_version=base_v,
+            schema_from=base_v,
         )
 
     def delete_last_n(self, n: int) -> int:
@@ -1344,9 +1385,11 @@ class SnapshotStore:
                 m["tombstones"] + [self._entry(tomb, v, tmn, tmx, rows=tcnt)],
                 meta=meta,
                 version=v,
+                schema_from=base_v,
             )
         return self._commit(
-            self._union(remaining, new), meta=meta, base_version=base_v
+            self._union(remaining, new), meta=meta, base_version=base_v,
+            schema_from=base_v,
         )
 
     def upsert(self, rows: DataFrame, meta: dict | None = None,
@@ -1396,6 +1439,7 @@ class SnapshotStore:
                 meta=meta,
                 version=v,
                 cluster_counts=cluster_counts,
+                schema_from=v - 1,
             )
         base_v = self.current_version()
         base = self.read(base_v)
@@ -1408,7 +1452,9 @@ class SnapshotStore:
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_prio")
         )
-        return self._commit(final, meta=meta, base_version=base_v)
+        return self._commit(
+            final, meta=meta, base_version=base_v, schema_from=base_v
+        )
 
     def replace(self, df: DataFrame, meta: dict | None = None,
                 content_preserving: bool = False) -> int:
@@ -1465,6 +1511,7 @@ class SnapshotStore:
             # so its footer counts restore exactness after the mutations
             # that had to leave the embedded stats stale
             cluster_counts=self._seg_cluster_counts(current, seg),
+            schema_from=base_v,
         )
 
     # -- maintenance --------------------------------------------------------

@@ -11,11 +11,14 @@ Spark-first equivalent:
   column → ``write.partitionBy("cluster_id")`` parquet — one disk
   partition per inverted list;
 - **search** (V5): query→centroid distances are computed driver-side
-  (centroids are tiny: ≤100 × dim floats), the top-nprobe cluster ids
-  become an ``isin`` filter, and Spark **partition pruning** skips every
-  non-probed list on disk — the distributed analog of FAISS scanning 10
-  of 100 lists. Candidates are then ranked by exact cosine, top-k per
-  query.
+  (centroids are tiny: ≤100 × dim floats), and the top-nprobe cluster
+  ids become an ``isin`` filter on the inverted-list relation, which is
+  memoized per index state — Spark **partition pruning** then skips
+  every non-probed list in the cached file listing, the distributed
+  analog of FAISS scanning 10 of 100 lists. One ``mapInPandas`` stage
+  scores the surviving rows with the exact path's numpy kernel, masked
+  to each query's own probed lists, and keeps a tie-aware local top-k;
+  one small window merges those survivors into the top-k per query.
 
 Recall semantics match FAISS: results are exact within probed lists;
 nprobe = nlist degrades to exact search (tested in tests/test_ivf.py).
@@ -78,11 +81,13 @@ PRUNE_SKIP_COVERAGE = 0.8
 # (serialization/analysis; evaluation is an InSet hash): ~7 s at this
 # bound, which the saved listing+scan repays whenever the prune fires
 # at all. The semi-join fallback above the bound is therefore a
-# PLAN-SIZE guard, not a performance win — at 10⁵ probed ids consider
-# a basePath+path-list scan instead (same static pruning, no
-# expression). The full-coverage sizes where isin loses to semi
-# (probed ≥ nlist: +1.2 s at 4k literals, +13 s at 32k) are exactly
-# the sizes the coverage gate already refuses to prune.
+# PLAN-SIZE guard, not a performance win. The literal prunes the
+# listing that IVFIndex.data() already holds (the relation is memoized
+# per index state), so a basePath + path-list scan would buy nothing:
+# it would list the probed directories again on every call. The
+# full-coverage sizes where isin loses to semi (probed ≥ nlist: +1.2 s
+# at 4k literals, +13 s at 32k) are exactly the sizes the coverage
+# gate already refuses to prune.
 PRUNE_ISIN_MAX = 16384
 
 # filtered_search auto-route rule (r11): both routes' dominant cost is
@@ -123,6 +128,8 @@ class IVFIndex:
         # (data_path, {cluster_id: rows}) memo for cluster_counts — the
         # file itself is keyed by the same token, see write_cluster_stats
         self._stats_cache: tuple[str, dict] | None = None
+        # (freshness token, relation) memo for data() — see _data_token
+        self._data_memo: tuple[tuple, DataFrame] | None = None
 
     @property
     def _data_path(self) -> str:
@@ -307,7 +314,50 @@ class IVFIndex:
             return np.array(json.load(f)["centroids"], dtype=np.float64)
 
     def data(self) -> DataFrame:
-        return self.spark.read.parquet(self._data_path)
+        """The inverted lists as one ``cluster_id``-partitioned relation,
+        memoized per index state. Each ``spark.read.parquet`` lists every
+        ``cluster_id=*`` directory (a Spark job once there are more than
+        32 of them) and infers the schema (another job); the memo keeps
+        one relation, and with it one file listing, for as long as
+        :meth:`_data_token` holds, and each later ``isin(probed)``
+        prunes that cached listing with no job. A path the local
+        filesystem cannot stat is read fresh on every call."""
+        token = self._data_token()
+        memo = self._data_memo
+        if token is not None and memo is not None and memo[0] == token:
+            return memo[1]
+        df = self.spark.read.parquet(self._data_path)
+        self._data_memo = None if token is None else (token, df)
+        return df
+
+    def _data_token(self) -> tuple | None:
+        """Freshness token of the relation :meth:`data` serves: the data
+        path, the session, and the mtimes of the data directory, of its
+        ``_SUCCESS`` marker and of ``centroids.json``. Every Spark write
+        into the data path — this object's build, a sibling's rebuild of
+        the same root, an append — stages under the directory and
+        rewrites ``_SUCCESS``, and a quantizer swap rewrites
+        ``centroids.json``, so each reads as a new state and the next
+        call lists the files again. None when the data directory cannot
+        be stat'ed (e.g. a non-local URI)."""
+
+        def mtime(path):
+            try:
+                return os.stat(path).st_mtime_ns
+            except OSError:
+                return None
+
+        path = self._data_path
+        dir_mtime = mtime(path)
+        if dir_mtime is None:
+            return None
+        return (
+            path,
+            self.spark,
+            dir_mtime,
+            mtime(os.path.join(path, "_SUCCESS")),
+            mtime(self._centroids_path),
+        )
 
     def nlist(self) -> int:
         """List count from the index metadata (a scalar read, no
@@ -555,6 +605,7 @@ class IVFIndex:
         nprobe: int,
         query_id: str = "query_id",
         query_vec: str = "query_vec",
+        qrows: list | None = None,
     ) -> DataFrame:
         """Large-nlist routing (VERDICT r5 next #4): the (query_id,
         cluster_id) table computed WITHOUT any driver-side centroid
@@ -571,13 +622,16 @@ class IVFIndex:
         shipped all nq×nlist scored structs as array payload; this
         version truncates BEFORE anything is shuffled. Tie-break
         matches the driver router: similarity desc, then cluster_id asc
-        (np.argsort is stable over index order)."""
+        (np.argsort is stable over index order). ``qrows``: the query
+        batch when the caller has already collected it, so it is not
+        collected twice."""
         import numpy as np
         import pandas as pd
 
         from pyspark.sql.types import DoubleType, StructField, StructType
 
-        qrows = queries.select(query_id, query_vec).collect()  # nq-scale
+        if qrows is None:
+            qrows = queries.select(query_id, query_vec).collect()  # nq-scale
         spark = self.spark
         if not qrows:
             return (
@@ -688,25 +742,31 @@ class IVFIndex:
     ) -> DataFrame:
         """Top-k by cosine within the nprobe nearest lists per query.
 
-        Plan shape: scan(data, cluster_id ∈ probed) [partition-pruned]
-        ⋈_broadcast (query_id, cluster_id) routing table → exact cosine →
-        per-query window top-k. Output: (query_id, vec_id, rank,
-        similarity).
+        Plan shape: the query batch is collected and routed to its
+        (query_id, cluster_id) probe pairs; then ONE scan of the memoized
+        inverted-list relation, pruned to the probed lists by a literal
+        ``isin`` (a partition filter over the cached listing — no listing
+        or schema job), feeds ONE ``mapInPandas`` scoring stage (see
+        :meth:`_probe_topk`) that emits each task's tie-aware local
+        top-k, and one small window over those survivors ranks the
+        result. Output: (query_id, vec_id, rank, similarity). Exact
+        within the probed lists; at full probe it is the same numpy
+        kernel and (sim desc, id asc) order as ``topk_similarity_join``.
 
-        ``routing``: 'driver' collects the centroid set and prunes the
-        scan with a literal isin (the FAISS-in-RAM contract — right for
-        the reference's nlist ≤ 100); 'distributed' routes through
+        ``routing``: 'driver' collects the centroid set and routes in
+        numpy (the FAISS-in-RAM contract — right for the reference's
+        nlist ≤ 100); 'distributed' routes through
         :meth:`route_distributed` with NO driver-side centroid collect —
-        the only thing that ever reaches the driver is the PROBED id set
-        (≤ nq × nprobe ints, bounded by the query-batch contract, not by
-        nlist), which becomes the same literal partition-pruning filter.
-        This path stays correct (and driver-safe) at nlist ≈ √n =
-        10⁴-10⁵ on a 100 TB corpus. 'auto' picks driver at or below
-        AUTO_DISTRIBUTED_NLIST (8,192 — the measured crossover, see the
-        constant's note), distributed above. 'batch' dispatches to
-        :meth:`search_batch` — the corpus-scale-QUERY-set path where
-        nothing query-scale reaches the driver (both other routings
-        collect the query batch, which is their contract)."""
+        the only routing state that reaches the driver is the nq × nprobe
+        probe pairs (bounded by the query-batch contract, not by nlist),
+        which feed the same scan and kernel. This path stays correct
+        (and driver-safe) at nlist ≈ √n = 10⁴-10⁵ on a 100 TB corpus.
+        'auto' picks driver at or below AUTO_DISTRIBUTED_NLIST (8,192 —
+        the measured crossover, see the constant's note), distributed
+        above. 'batch' dispatches to :meth:`search_batch` — the
+        corpus-scale-QUERY-set path where nothing query-scale reaches
+        the driver (both other routings collect the query batch, which
+        is their contract)."""
         if routing not in ("auto", "driver", "distributed", "batch"):
             # fail loudly: a typo'd routing must not silently fall
             # through to the driver collect a batch caller is avoiding
@@ -728,56 +788,134 @@ class IVFIndex:
             return self.search_batch(
                 queries, k, nprobe, query_id, query_vec, id_col, vec_col
             )
-        if routing == "distributed":
-            if queries.isEmpty():
-                return self.search_empty(query_id, id_col)
-            # materialize the k-scale routing table once: it feeds both
-            # the probed-id collect and the search join
-            routing_df = self.route_distributed(
-                queries, nprobe, query_id, query_vec
-            ).localCheckpoint()
-            probed = [
-                r.cluster_id
-                for r in routing_df.select("cluster_id").distinct().collect()
-            ]
-            q = F.broadcast(
-                queries.withColumnRenamed(query_vec, "_qvec").join(
-                    routing_df, query_id
-                )
-            )
-            scored = (
-                self.data()
-                .filter(F.col("cluster_id").isin(probed))
-                .join(q, "cluster_id")
-                .withColumn("_sim", cosine_similarity(vec_col, "_qvec"))
-            )
-            w = Window.partitionBy(query_id).orderBy(F.desc("_sim"), F.asc(id_col))
-            return (
-                scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select(query_id, id_col, "rank", F.col("_sim").alias("similarity"))
-            )
         qrows = queries.select(query_id, query_vec).collect()
         if not qrows:
             return self.search_empty(query_id, id_col)
-        # centroid routing is driver-side like FAISS's quantizer (tiny)
-        routing_pairs, probed = self.route(qrows, nprobe, query_id, query_vec)
-        routing_df = self.spark.createDataFrame(routing_pairs, [query_id, "cluster_id"])
+        if routing == "distributed":
+            pairs = [
+                (r[query_id], r["cluster_id"])
+                for r in self.route_distributed(
+                    queries, nprobe, query_id, query_vec, qrows=qrows
+                ).collect()
+            ]
+        else:
+            # centroid routing is driver-side like FAISS's quantizer (tiny)
+            pairs, _ = self.route(qrows, nprobe, query_id, query_vec)
+        return self._probe_topk(
+            qrows, pairs, k, queries.schema[query_id], id_col, vec_col
+        )
 
-        q = F.broadcast(
-            queries.withColumnRenamed(query_vec, "_qvec")
-            .join(routing_df, query_id)
+    def _probe_topk(
+        self, qrows: list, pairs: list, k: int, qid_field, id_col: str, vec_col: str
+    ) -> DataFrame:
+        """The interactive scoring stage: top-k of each query over the
+        rows of ITS probed lists only. The query ids, the normalized
+        query matrix and ``{cluster_id: query positions}`` ride one
+        broadcast; each scan task scores its Arrow batches with the exact
+        path's numpy kernel (``similarity._exact_scoring_core``), masks
+        every (row, query) pair whose list that query did not probe, and
+        emits a local top-k per query in (sim desc, id asc) order, ranked
+        on ``exact_topk``'s row-by-row rescore so duplicate vectors tie
+        exactly wherever they sit; one small window merges the
+        survivors.
+
+        A null corpus vector has no cosine: it ranks after every
+        scorable row of the query's probed lists (then by id) and its
+        similarity is a real null, so it only surfaces when fewer than
+        k scorable rows were probed. Each task pads its emit with nulls
+        only up to k, which is enough for the window to find the
+        globally first ones."""
+        import pandas as pd
+
+        from pyspark.sql.types import DoubleType, StructField, StructType
+
+        from deployment_spark.operators.similarity import _exact_scoring_core
+
+        normalize_rows, pair_scores, _, row_scores, exact_topk = _exact_scoring_core()
+        qids = [r[0] for r in qrows]
+        qmat = normalize_rows(np.array([r[1] for r in qrows], dtype=np.float64))
+        positions: dict = {}
+        for i, q in enumerate(qids):
+            positions.setdefault(q, []).append(i)
+        lists: dict[int, set] = {}
+        for q, c in pairs:
+            lists.setdefault(int(c), set()).update(positions[q])
+        lists = {c: sorted(p) for c, p in lists.items()}
+        data = self._apply_cluster_prune(self.data(), sorted(lists))
+        bq = self.spark.sparkContext.broadcast((qids, qmat, lists))
+        kk = int(k)
+        out_schema = StructType(
+            [
+                StructField("_qid", qid_field.dataType),
+                StructField("_cid", data.schema[id_col].dataType),
+                StructField("_sim", DoubleType()),
+            ]
         )
-        # isin(probed) prunes non-probed cluster_id partitions at the scan
-        candidates = self.data().filter(F.col("cluster_id").isin(probed))
-        scored = candidates.join(q, "cluster_id").withColumn(
-            "_sim", cosine_similarity(vec_col, "_qvec")
+
+        def probe_topk(batches):
+            ids, qm, probe_lists = bq.value
+            nq = len(ids)
+            # (probed list, query) mask, looked up per row by cluster id
+            cids = np.array(sorted(probe_lists), dtype=np.int64)
+            probes = np.zeros((len(cids), nq), dtype=bool)
+            for i, c in enumerate(cids):
+                probes[i, probe_lists[int(c)]] = True
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                # the scan is pruned to probed lists, so every id is in cids
+                cl = pdf["cluster_id"].to_numpy(dtype=np.int64)
+                allowed = probes[np.searchsorted(cids, cl)]
+                vecs = pdf[vec_col]
+                ok = np.nonzero(vecs.notna().to_numpy())[0]
+                null_rows = np.nonzero(vecs.isna().to_numpy())[0]
+                cmat = np.array(vecs.iloc[ok].tolist(), dtype=np.float64).reshape(
+                    ok.size, qm.shape[1]
+                )
+                sims = pair_scores(qm, cmat, "cosine", query_prenormalized=True)
+                cid_arr = pdf[id_col].to_numpy()
+                out_q, out_c, out_s = [], [], []
+                for j, qid in enumerate(ids):
+                    mine = np.nonzero(allowed[ok, j])[0]  # positions in ok
+                    top, scores = exact_topk(
+                        sims[mine, j],
+                        lambda r: row_scores(qm[j], cmat[mine[r]], "cosine"),
+                        cid_arr[ok[mine]],
+                        kk,
+                    )
+                    out_q.extend([qid] * top.size)
+                    out_c.extend(cid_arr[ok[mine[top]]].tolist())
+                    out_s.extend(scores.tolist())
+                    short = kk - top.size
+                    nulls = null_rows[allowed[null_rows, j]]
+                    if short > 0 and nulls.size:
+                        nulls = nulls[np.argsort(cid_arr[nulls], kind="stable")[:short]]
+                        out_q.extend([qid] * nulls.size)
+                        out_c.extend(cid_arr[nulls].tolist())
+                        out_s.extend([None] * nulls.size)
+                if out_q:
+                    yield pd.DataFrame(
+                        {
+                            "_qid": out_q,
+                            "_cid": out_c,
+                            "_sim": pd.array(out_s, dtype="Float64"),
+                        }
+                    )
+
+        candidates = data.select(id_col, vec_col, "cluster_id").mapInPandas(
+            probe_topk, schema=out_schema
         )
-        w = Window.partitionBy(query_id).orderBy(F.desc("_sim"), F.asc(id_col))
+        # desc() puts the null similarities last, then id asc
+        w = Window.partitionBy("_qid").orderBy(F.desc("_sim"), F.asc("_cid"))
         return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, id_col, "rank", F.col("_sim").alias("similarity"))
+            candidates.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= kk)
+            .select(
+                F.col("_qid").alias(qid_field.name),
+                F.col("_cid").alias(id_col),
+                "rank",
+                F.col("_sim").alias("similarity"),
+            )
         )
 
     def filtered_search(
@@ -941,9 +1079,11 @@ class IVFIndex:
         ``similarity.radius_search`` computed over a partition-pruned
         scan + routing join (that full-probe equivalence is the
         hash-gated arm; pruning subset semantics are pinned in
-        test_ivf.py). Same plan shape as ``search`` with the radius
-        predicate replacing the top-k window; with ``limit_per_query``
-        the tie-aware rank window caps each query, matching
+        test_ivf.py). Unlike ``search`` it scores with the Catalyst
+        cosine over a broadcast routing join, the expression
+        ``radius_search`` uses, so the radius test sees bit-equal
+        similarities on both paths; with ``limit_per_query`` the
+        tie-aware rank window caps each query, matching
         radius_search's contract. Output
         (query_id, vec_id, similarity[, rank])."""
         if routing not in ("auto", "driver", "distributed"):

@@ -199,7 +199,47 @@ def _exact_scoring_core():
 
         return np.lexsort((sort_ids, -sims_col))[:take]
 
-    return normalize_rows, pair_scores, tie_aware_order
+    def row_scores(qvec, cmat, metric):
+        """One query's scores against ``cmat`` computed ROW BY ROW (an
+        elementwise product summed along each row): unlike the BLAS
+        product in pair_scores, a row's score depends only on that row,
+        never on its position or on the batch's shape, so duplicate
+        vectors anywhere in the corpus score bit-identically. For cosine
+        ``qvec`` is already normalized (the broadcast paths normalize the
+        queries once on the driver)."""
+        if metric == "cosine":
+            cmat = normalize_rows(cmat)
+        if metric == "l2":
+            return -((cmat - qvec) ** 2).sum(axis=1)
+        return (cmat * qvec).sum(axis=1)
+
+    def exact_topk(approx_col, rescore, sort_ids, take):
+        """Local top-`take` of one query column as (row indices, scores)
+        in the global window's (score desc, id asc) order. ``approx_col``
+        comes from pair_scores, whose BLAS product can round the same
+        vector differently at different row positions — a tie between
+        duplicates would then break by position instead of by id. So
+        every row within 1e-9 (relative) of the take-th best approximate
+        score — far wider than that rounding; a wider net only costs
+        more rescoring — is rescored with ``rescore(rows)`` (row_scores
+        over those rows), and the order and the emitted scores come from
+        the rescore. NaN scores rank last, as in tie_aware_order."""
+        import numpy as np
+
+        n = approx_col.shape[0]
+        take = min(take, n)
+        if take <= 0:
+            return np.zeros(0, dtype=np.int64), np.zeros(0)
+        rows = np.arange(n)
+        if take < n:
+            approx = np.where(np.isnan(approx_col), -np.inf, approx_col)
+            kth = np.partition(approx, n - take)[n - take]
+            rows = np.nonzero(approx >= kth - 1e-9 * max(1.0, abs(kth)))[0]
+        exact = rescore(rows)
+        order = np.lexsort((sort_ids[rows], -exact))[:take]
+        return rows[order], exact[order]
+
+    return normalize_rows, pair_scores, tie_aware_order, row_scores, exact_topk
 
 
 def topk_similarity_join(
@@ -236,7 +276,7 @@ def topk_similarity_join(
 
     import numpy as np
 
-    _normalize_rows, _pair_scores, _tie_aware_order = _exact_scoring_core()
+    _normalize_rows, _pair_scores, _, _row_scores, _exact_topk = _exact_scoring_core()
     qids = [r[query_id] for r in qrows]
     qmat = np.array([r[query_vec] for r in qrows], dtype=np.float64)
     if metric == "cosine":
@@ -269,14 +309,18 @@ def topk_similarity_join(
                 continue
             cmat = np.array(pdf["_cvec"].tolist(), dtype=np.float64)
             sims = _pair_scores(qm, cmat, metric, query_prenormalized=True)
-            take = min(kk, sims.shape[0])
             cid_arr = pdf["_cid"].to_numpy()
             out_q, out_c, out_s = [], [], []
             for j, qid in enumerate(ids):
-                order = _tie_aware_order(sims[:, j], cid_arr, take)
-                out_q.extend([qid] * len(order))
-                out_c.extend(cid_arr[order].tolist())
-                out_s.extend(sims[order, j].tolist())
+                top, scores = _exact_topk(
+                    sims[:, j],
+                    lambda rows: _row_scores(qm[j], cmat[rows], metric),
+                    cid_arr,
+                    kk,
+                )
+                out_q.extend([qid] * len(top))
+                out_c.extend(cid_arr[top].tolist())
+                out_s.extend(scores.tolist())
             yield pd.DataFrame({"_qid": out_q, "_cid": out_c, "_sim": out_s})
 
     candidates = c.mapInPandas(local_topk, schema=out_schema)
@@ -504,7 +548,7 @@ def _grouped_pair_topk(both, group_cols, kk, metric, cid_kind,
     import numpy as np
     import pandas as pd
 
-    _, _pair_scores, _tie_aware_order = _exact_scoring_core()
+    _, _pair_scores, _tie_aware_order, _, _ = _exact_scoring_core()
 
     def pair_topk(pdf):
         is_q = pdf["_qid"].notna()
@@ -551,7 +595,7 @@ def _grouped_pair_hits(both, group_cols, radius, lim, cid_kind):
     import numpy as np
     import pandas as pd
 
-    _, _pair_scores, _tie_aware_order = _exact_scoring_core()
+    _, _pair_scores, _tie_aware_order, _, _ = _exact_scoring_core()
     rad = float(radius)
 
     def pair_hits(pdf):

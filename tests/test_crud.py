@@ -185,6 +185,67 @@ def test_schema_evolution_additive_column(spark, tmp_path, mode):
 
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_time_travel_read_after_replace_keeps_old_schema(spark, tmp_path, mode):
+    """A replace may publish a new schema; a read of a version from
+    before it must still get THAT version's columns and values, not the
+    new schema (which reads the old files as nulls)."""
+    s = SnapshotStore(spark, str(tmp_path / f"tt_{mode}"), key="id", mode=mode)
+    s.create(mk(spark, [(1, "a"), (2, "b")]))
+    v_old = s.insert(mk(spark, [(3, "c")]))
+    s.replace(spark.createDataFrame([(7, 0.5)], ["id", "score"]))
+    # a schema-checked commit after the replace caches the NEW schema
+    s.insert(spark.createDataFrame([(8, 1.5)], ["id", "score"]))
+    old = s.read(v_old)
+    assert old.columns == ["id", "payload"]
+    assert {(r.id, r.payload) for r in old.collect()} == {(1, "a"), (2, "b"), (3, "c")}
+    assert {(r.id, r.score) for r in s.read().collect()} == {(7, 0.5), (8, 1.5)}
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_sibling_replace_invalidates_schema_cache(spark, tmp_path, mode):
+    """A sibling instance's replace publishes a new schema this
+    instance never saw; its next read must serve the new columns."""
+    root = str(tmp_path / f"sib_{mode}")
+    a = SnapshotStore(spark, root, key="id", mode=mode)
+    a.create(mk(spark, [(1, "a")]))
+    a.insert(mk(spark, [(2, "b")]))  # caches the schema in a
+    SnapshotStore(spark, root, key="id", mode=mode).replace(
+        spark.createDataFrame([(5, 2.5)], ["id", "score"])
+    )
+    got = a.read()
+    assert sorted(got.columns) == ["id", "score"]
+    assert [(r.id, r.score) for r in got.collect()] == [(5, 2.5)]
+    # and the schema check now judges rows against the new schema
+    a.insert(spark.createDataFrame([(6, 3.5)], ["id", "score"]))
+    with pytest.raises(ValueError, match="schema drift"):
+        a.insert(mk(spark, [(9, "old-shape")]))
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_schema_cache_follows_checked_commits(spark, tmp_path, mode):
+    """The schema cache is filled by the first read of a version and
+    moves with every schema-checked commit, so a mutation loop never
+    re-infers the schema; create and replace clear it."""
+    s = SnapshotStore(spark, str(tmp_path / f"carry_{mode}"), key="id", mode=mode)
+    s.create(mk(spark, [(1, "a"), (2, "b"), (3, "c")]))
+    assert s._schema_cache is None
+    s.read()
+    assert s._schema_cache[0] == s.current_version()
+    for mutate in (
+        lambda: s.insert(mk(spark, [(4, "d")])),
+        lambda: s.delete_ids([1]),
+        lambda: s.update([2], mk(spark, [(20, "b2")])),
+        lambda: s.upsert(mk(spark, [(3, "C")])),
+        lambda: s.compact(),
+    ):
+        mutate()
+        assert s._schema_cache is not None
+        assert s._schema_cache[0] == s.current_version()
+    s.replace(mk(spark, [(1, "z")]))
+    assert s._schema_cache is None
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
 def test_concurrent_commit_loser_fails_loudly(spark, tmp_path, mode):
     """Optimistic concurrency: two writers that both read version N race
     to claim N+1; the loser raises ConcurrentCommitError instead of

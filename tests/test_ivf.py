@@ -3,6 +3,8 @@ must reach a recall floor (SURVEY §5.2(2))."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -854,6 +856,162 @@ def test_search_batch_tolerates_null_corpus_vectors(
     }
     assert after_topk == before_topk
     assert after_range == before_range
+
+
+def test_data_memo_tracks_index_state(spark, tmp_path, embeddings, queries_df):
+    """data() keeps one relation (one file listing, one schema
+    inference) per index state, and every change of state — a rebuild
+    on this object, an append into data/, a sibling's rebuild of the
+    same root, another session — yields a fresh one. A stale relation
+    would either raise FILE_NOT_EXIST (deleted files) or miss rows."""
+    root = str(tmp_path / "memo")
+    idx = IVFIndex(spark, root).build(embeddings, nlist=4)
+    first = idx.data()
+    assert idx.data() is first
+
+    idx.build(embeddings, nlist=4)
+    rebuilt = idx.data()
+    assert rebuilt is not first
+    assert idx.data() is rebuilt
+
+    # append a duplicate of query 0's vector under a new id into the
+    # same list: at full probe it must surface in the query's top 2
+    q0 = queries_df.filter(F.col("query_id") == 0).first().query_vec
+    own = rebuilt.filter(F.col("vec_id") == 0).first()
+    spark.createDataFrame(
+        [(999_999, list(q0), own.label, own.cluster_id)], rebuilt.schema
+    ).write.mode("append").partitionBy("cluster_id").parquet(
+        os.path.join(root, "data")
+    )
+    appended = idx.data()
+    assert appended is not rebuilt
+    top = {
+        r.vec_id
+        for r in idx.search(queries_df, k=2, nprobe=4).collect()
+        if r.query_id == 0
+    }
+    assert top == {0, 999_999}
+
+    # a sibling rebuild of the same root deletes every file the memo
+    # listed: the next search must list again, not read dead files
+    even = embeddings.filter(F.col("vec_id") % 2 == 0)
+    IVFIndex(spark, root).build(even, nlist=4)
+    sib = idx.data()
+    assert sib is not appended
+    got = idx.search(queries_df, k=5, nprobe=4).collect()
+    assert got and all(r.vec_id % 2 == 0 for r in got)
+    assert sib.count() == even.count()
+
+    idx.spark = spark.newSession()
+    fresh = idx.data()
+    assert fresh is not sib
+    assert fresh.sparkSession is idx.spark
+    assert idx.data() is fresh
+
+
+def test_pruned_search_is_exact_within_probed_lists(spark, tmp_path):
+    """At nprobe < nlist, search equals a numpy top-k over ONLY the rows
+    of each query's probed lists (route from IVFIndex.route), ranked by
+    similarity desc then id asc. Identical vectors under different ids
+    must tie exactly and break by id, wherever they sit in the scan; a
+    null-vector row ranks after every scorable row and carries a null
+    (not NaN) similarity. Both routings feed the same kernel, and at
+    full probe it is bit-identical to topk_similarity_join."""
+    import json
+
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    NLIST, DIM, N, NPROBE = 8, 8, 160, 2
+    cents = rng.normal(size=(NLIST, DIM)) * 3
+    vecs = cents[rng.integers(0, NLIST, N)] + rng.normal(size=(N, DIM))
+    assign = np.argmin(((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(-1), axis=1)
+    root = str(tmp_path / "pruned")
+    os.makedirs(root)
+    with open(os.path.join(root, "centroids.json"), "w") as f:
+        json.dump({"nlist": NLIST, "dim": DIM, "centroids": cents.tolist()}, f)
+    idx = IVFIndex(spark, root)
+    idx._write_centroids_parquet(cents.tolist())
+
+    # query 0 sits next to a vector stored three times: twice in its
+    # nearest list, once in a list it does not probe
+    tie = rng.normal(size=DIM)
+    qvecs = {0: tie + 0.05 * rng.normal(size=DIM)}
+    qvecs.update({q: vecs[5 * q] + 0.3 * rng.normal(size=DIM) for q in (1, 2, 3)})
+    qrows = [{"query_id": q, "query_vec": v.tolist()} for q, v in qvecs.items()]
+    pairs, _ = idx.route(qrows, NPROBE)
+    home = next(c for q, c in pairs if q == 0)  # query 0's nearest list
+    away = next(c for c in range(NLIST) if (0, c) not in pairs)
+    rows = [(i, vecs[i].tolist(), int(assign[i])) for i in range(N)]
+    rows += [
+        (900, tie.tolist(), home),
+        (450, tie.tolist(), home),
+        (200, tie.tolist(), away),
+        (300, None, home),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, cluster_id int"
+    ).write.partitionBy("cluster_id").parquet(os.path.join(root, "data"))
+    queries = spark.createDataFrame(
+        [(q, v.tolist()) for q, v in qvecs.items()], "query_id long, query_vec array<double>"
+    )
+
+    ids = np.array([r[0] for r in rows])
+    lists = np.array([r[2] for r in rows])
+    null = np.array([r[1] is None for r in rows])
+    mat = np.array([r[1] if r[1] is not None else [0.0] * DIM for r in rows])
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True).clip(1e-300)
+
+    def expected(k):
+        out = {}
+        for q, v in qvecs.items():
+            probed = np.isin(lists, [c for qq, c in pairs if qq == q])
+            sims = (unit * (v / np.linalg.norm(v))).sum(axis=1)
+            ok = np.nonzero(probed & ~null)[0]
+            order = ok[np.lexsort((ids[ok], -sims[ok]))]
+            nulls = np.nonzero(probed & null)[0]
+            ranked = [(int(ids[i]), float(sims[i])) for i in order]
+            ranked += [(int(ids[i]), None) for i in nulls[np.argsort(ids[nulls])]]
+            out[q] = ranked[:k]
+        return out
+
+    for routing, k in (("driver", 3), ("driver", N + 10), ("distributed", N + 10)):
+        got = {}
+        for r in idx.search(
+            queries, k=k, nprobe=NPROBE, routing=routing
+        ).collect():
+            got.setdefault(r.query_id, []).append((r.rank, r.vec_id, r.similarity))
+        want = expected(k)
+        assert set(got) == set(want), routing
+        for q, ranked in want.items():
+            g = sorted(got[q])
+            assert [rk for rk, _, _ in g] == list(range(1, len(ranked) + 1))
+            assert [vid for _, vid, _ in g] == [vid for vid, _ in ranked], (routing, k, q)
+            for (_, _, gs), (_, ws) in zip(g, ranked):
+                if ws is None:
+                    assert gs is None
+                else:
+                    assert abs(gs - ws) < 1e-12
+        ranked0 = sorted(got[0])
+        assert [vid for _, vid, _ in ranked0[:2]] == [450, 900]
+        assert ranked0[0][2] == ranked0[1][2]
+        if k > N:  # every probed row returned: the null row comes last
+            assert ranked0[-1][1:] == (300, None)
+
+    # full probe: the same kernel as the exact path, to the last bit
+    scorable = spark.read.parquet(os.path.join(root, "data")).filter(
+        F.col("embedding").isNotNull()
+    )
+    exact = {
+        (r.query_id, r.rank): (r.vec_id, r.similarity)
+        for r in topk_similarity_join(scorable, queries, k=10).collect()
+    }
+    full = {
+        (r.query_id, r.rank): (r.vec_id, r.similarity)
+        for r in idx.search(queries, k=10, nprobe=NLIST).collect()
+    }
+    assert full == exact
+    assert [exact[(0, rk)][0] for rk in (1, 2, 3)] == [200, 450, 900]
 
 
 def test_drift_triggered_retrain_relayouts_store(spark, sf_dir, tmp_path):

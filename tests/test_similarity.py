@@ -295,6 +295,43 @@ def test_topk_tie_break_deterministic_across_partitions(spark):
         assert all(abs(r.similarity - 1.0) < 1e-12 for r in got)
 
 
+def test_exact_topk_ties_duplicates_across_batch_shapes():
+    """BLAS rounds a one-row product differently from the same row inside
+    a larger block, so two copies of one vector scored in differently
+    shaped batches get different approximate scores. The local top-k
+    must still see them as an exact tie broken by id, including when
+    only one of them fits in k."""
+    import numpy as np
+
+    from deployment_spark.operators.similarity import _exact_scoring_core
+
+    _, pair_scores, _, row_scores, exact_topk = _exact_scoring_core()
+    rng = np.random.default_rng(3)
+    q = rng.normal(size=(4, 8))
+    q /= np.linalg.norm(q, axis=1, keepdims=True)
+    dup = rng.normal(size=8)
+    block = np.vstack([rng.normal(size=(9, 8)), dup])  # copy with id 20
+    single = dup[None, :]  # copy with id 10, alone in its batch
+    approx = np.vstack([
+        pair_scores(q, block, "cosine", query_prenormalized=True),
+        pair_scores(q, single, "cosine", query_prenormalized=True),
+    ])
+    cmat = np.vstack([block, single])
+    ids = np.array(list(range(9)) + [20, 10])
+    assert (approx[9] != approx[10]).any()  # the fixture shows the jitter
+    for j in range(len(q)):
+        def rescore(rows, j=j):
+            return row_scores(q[j], cmat[rows], "cosine")
+
+        top, scores = exact_topk(approx[:, j], rescore, ids, len(ids))
+        ranked = list(ids[top])
+        first = ranked.index(10)
+        assert ranked[first + 1] == 20
+        assert scores[first] == scores[first + 1]
+        top, _ = exact_topk(approx[:, j], rescore, ids, first + 1)
+        assert ids[top][-1] == 10
+
+
 def test_cosine_neardup_pairs(embeddings):
     sub = embeddings.filter(F.col("vec_id") < 50)
     pairs = cosine_neardup_pairs(sub, threshold=-1.0).collect()

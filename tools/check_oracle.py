@@ -102,6 +102,30 @@ def _exact_topk_numpy(sf_dir: str, k: int = 10, n_queries: int = 20) -> dict[int
     return out
 
 
+# Every IVFIndex.route_distributed call made while the current entry ran,
+# as (realpath of the index root, nlist). check_ann_recall reads it to
+# prove the (ivf, distributed) group really took the distributed route.
+_ROUTE_CALLS: list[tuple[str, int]] = []
+
+
+def _install_route_witness() -> None:
+    """Wrap IVFIndex.route_distributed so each call is recorded in
+    _ROUTE_CALLS. The wrapper only observes; the engine's answer is
+    unchanged. Idempotent."""
+    from deployment_spark.operators.ivf import IVFIndex
+
+    orig = IVFIndex.route_distributed
+    if getattr(orig, "_witness", False):
+        return
+
+    def witnessed(self, *args, **kwargs):
+        _ROUTE_CALLS.append((os.path.realpath(self.root), self.nlist()))
+        return orig(self, *args, **kwargs)
+
+    witnessed._witness = True
+    IVFIndex.route_distributed = witnessed
+
+
 def _pairs_to_sets(rows) -> dict[int, set[int]]:
     out: dict[int, set[int]] = {}
     for r in rows:
@@ -197,6 +221,20 @@ def check_ann_recall(spark, spark_sf: str, data_sf: str, sdf: pd.DataFrame) -> l
         ).add(int(vid_v))
 
     problems: list[str] = []
+    # the distributed group's exactness argument needs the hand-seeded
+    # nlist > 1,024 index (one doc per list), and the group only tests
+    # distributed routing if route_distributed actually served it
+    from deployment_spark.queries import _ivf_big_index
+
+    big_index, _ = _ivf_big_index(spark, spark_sf)
+    big_nlist = big_index.nlist()
+    if big_nlist <= 1024:
+        problems.append(f"ivf/distributed: index nlist {big_nlist} is not > 1024")
+    if (os.path.realpath(big_index.root), big_nlist) not in _ROUTE_CALLS:
+        problems.append(
+            "ivf/distributed: IVFIndex.route_distributed did not run on the "
+            f"nlist={big_nlist} index while the entry ran"
+        )
     if set(approx_sets) != set(floors):
         problems.append(
             f"facet group set mismatch: {sorted(approx_sets)} vs {sorted(floors)}"
@@ -387,8 +425,10 @@ def main() -> int:
 
 
 def _run(spark, con, qs, oracles, names, spark_sf, args, failed, passed, rows_only):
+    _install_route_witness()
     for name in names:
         t0 = time.time()
+        _ROUTE_CALLS.clear()
         try:
             sdf = qs[name](spark, spark_sf).toPandas()
         except Exception as e:
