@@ -22,6 +22,11 @@ Spark-first equivalent:
 
 Recall semantics match FAISS: results are exact within probed lists;
 nprobe = nlist degrades to exact search (tested in tests/test_ivf.py).
+
+The composed indexes (IVF×PQ in ``ivfpq.py``, IVF×SQ8 in ``ivfsq.py``)
+are one scaffold, :class:`IVFCodecIndex`: this quantizer and its
+routing over a code table partitioned like the lists, with only the
+codec's scoring plugged in.
 """
 
 from __future__ import annotations
@@ -107,6 +112,23 @@ PRUNE_ISIN_MAX = 16384
 # scan-volume crossover, small ones mis-route only in the regime where
 # everything is cheap.
 POSTFILTER_MARGIN = 2.0
+
+
+def _ranked(cand: DataFrame, query_id: str, id_col: str, limit: int | None) -> DataFrame:
+    """Scored candidates (_qid, _cid, _sim) as (query_id, id_col,
+    similarity); with ``limit``, only each query's first ``limit`` in the
+    engine's (similarity desc, id asc) order, with their rank — the
+    shortlist and top-k windows of the search routes and the tie-aware
+    ``limit_per_query`` window of the range routes."""
+    out = [F.col("_qid").alias(query_id), F.col("_cid").alias(id_col)]
+    if limit is None:
+        return cand.select(*out, F.col("_sim").alias("similarity"))
+    w = Window.partitionBy("_qid").orderBy(F.desc("_sim"), F.asc("_cid"))
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= limit)
+        .select(*out, "rank", F.col("_sim").alias("similarity"))
+    )
 
 
 class IVFIndex:
@@ -463,8 +485,8 @@ class IVFIndex:
             return None
 
     def batch_prune_plan(self, probes, nprobe: int):
-        """Shared prune + salt decision of the four batch routes (r10,
-        VERDICT r9 #1/#2). Returns ``(probed, counts)``:
+        """Prune + salt decision of every batch route, made once in
+        :meth:`_batch_union`. Returns ``(probed, counts)``:
 
         - ``probed``: the collected distinct probed cluster-id list
           (nlist-bounded by construction — the only query-derived state
@@ -710,10 +732,11 @@ class IVFIndex:
         query_id: str = "query_id",
         query_vec: str = "query_vec",
     ) -> tuple[list, list]:
-        """Driver-side centroid routing shared by IVF and IVF×PQ search:
-        (query_id, cluster_id) pairs for each query's top-nprobe nearest
-        centroids (cosine on the normalized centroid set), plus the
-        sorted union of probed clusters for partition pruning."""
+        """Driver-side centroid routing shared by every interactive IVF
+        route (IVFIndex and the codec scaffold): (query_id, cluster_id)
+        pairs for each query's top-nprobe nearest centroids (cosine on
+        the normalized centroid set), plus the sorted union of probed
+        clusters for partition pruning."""
         cents = self.centroids()
         nprobe = min(nprobe, cents.shape[0])
         qn = cents / np.maximum(
@@ -726,6 +749,142 @@ class IVFIndex:
             order = np.argsort(-(qn @ v))[:nprobe]
             routing.extend((r[query_id], int(c)) for c in order)
         return routing, sorted({c for _, c in routing})
+
+    def _route_table(
+        self,
+        queries: DataFrame,
+        nprobe: int,
+        routing: str,
+        query_id: str,
+        query_vec: str,
+        qrows: list | None = None,
+    ) -> tuple[DataFrame, list]:
+        """The interactive (query_id, cluster_id) routing table and the
+        probed cluster ids it prunes to, for ``routing`` 'driver'
+        (:meth:`route`) or 'distributed' (:meth:`route_distributed`, no
+        centroid collect; only the nq×nprobe probed ids reach the
+        driver). ``qrows``: the query batch when the caller already
+        collected it."""
+        if routing == "distributed":
+            routing_df = self.route_distributed(
+                queries, nprobe, query_id, query_vec, qrows=qrows
+            ).localCheckpoint()
+            probed = [
+                r.cluster_id
+                for r in routing_df.select("cluster_id").distinct().collect()
+            ]
+            return routing_df, probed
+        if qrows is None:
+            qrows = queries.select(query_id, query_vec).collect()
+        pairs, probed = self.route(qrows, nprobe, query_id, query_vec)
+        return self.spark.createDataFrame(pairs, [query_id, "cluster_id"]), probed
+
+    def _batch_union(
+        self,
+        queries: DataFrame,
+        table: DataFrame,
+        nprobe: int,
+        query_id: str,
+        query_vec: str,
+        id_col: str,
+        payload_col: str,
+        code_type: str | None,
+        num_query_blocks: int | None,
+        max_cluster_rows_per_task: int | None,
+    ) -> tuple[DataFrame, list]:
+        """The setup every batch route shares: routing, pruning and the
+        grouped union frame, with NOTHING query-scale on the driver.
+
+        1. ROUTING is the blocked exact top-k over the CENTROID table
+           (``similarity.topk_similarity_join_blocked`` with k=nprobe):
+           no query broadcast, no centroid collect — scale-safe in nq
+           AND nlist simultaneously. The routing table is lazily
+           checkpointed because it feeds the query join, the prune
+           decision and (on a stats miss) the salting count; its rows
+           are nq·nprobe pairs, never corpus-scale.
+        2. PRUNING (:meth:`batch_prune_plan`): clusters no query probes
+           never leave the scan of ``table`` (static partition filter /
+           bounded semi-join), and the prune is skipped when probed
+           clusters cover ~all lists. Plan CONSTRUCTION may therefore
+           run bounded jobs — the probed-id collect (≤ nlist ids) and,
+           once per index, the cluster-stats count.
+        3. The UNION FRAME carries string-transported query rows
+           (_qid, _vec) and corpus rows (_cid, payload) keyed by the
+           probed cluster ``_g``, hot clusters sub-block salted from the
+           metadata counts (``_maybe_salt_hot_groups``). The payload is
+           ``payload_col``: full vectors into ``_vec`` when
+           ``code_type`` is None, else compressed codes into ``_code``
+           (typed ``code_type`` on the query side) so the shuffle
+           carries codes, not floats.
+
+        Rows whose payload is null are excluded up front: the numpy
+        scorers would crash on them. For full vectors the
+        visible top-k matches the interactive path whenever each
+        query's probed set holds ≥ k non-null rows; with fewer, the
+        interactive path pads its k with null-sim rows while the batch
+        routes return only the scorable ones (a null vector has no
+        defined rank). Returns ``(union frame, group columns)``."""
+        from deployment_spark.operators.similarity import (
+            DEFAULT_BLOCK_ROWS,
+            _maybe_salt_hot_groups,
+            topk_similarity_join_blocked,
+        )
+
+        probes = (
+            topk_similarity_join_blocked(
+                self.centroids_df(),
+                queries,
+                k=int(nprobe),
+                corpus_id="cluster_id",
+                corpus_vec="centroid",
+                query_id=query_id,
+                query_vec=query_vec,
+                num_query_blocks=num_query_blocks,
+                # centroid-table size is free index metadata — skip the
+                # blocked router's corpus-side sizing count
+                num_corpus_blocks=max(1, -(-self.nlist() // DEFAULT_BLOCK_ROWS)),
+            )
+            .select(query_id, "cluster_id")
+            .localCheckpoint(eager=False)
+        )
+        probed, salt_counts = self.batch_prune_plan(probes, int(nprobe))
+        table = self._apply_cluster_prune(table, probed)
+
+        if code_type is None:
+            q_code = []
+            payload = [F.col(payload_col).cast("array<double>").alias("_vec")]
+        else:
+            q_code = [F.lit(None).cast(code_type).alias("_code")]
+            payload = [
+                F.lit(None).cast("array<double>").alias("_vec"),
+                F.col(payload_col).alias("_code"),
+            ]
+        q = queries.join(probes, query_id).select(
+            F.col(query_id).cast("string").alias("_qid"),
+            F.lit(None).cast("string").alias("_cid"),
+            F.col(query_vec).cast("array<double>").alias("_vec"),
+            *q_code,
+            F.col("cluster_id").alias("_g"),
+        )
+        c = table.filter(F.col(payload_col).isNotNull()).select(
+            F.lit(None).cast("string").alias("_qid"),
+            F.col(id_col).cast("string").alias("_cid"),
+            *payload,
+            F.col("cluster_id").alias("_g"),
+        )
+        q, c, group_cols = _maybe_salt_hot_groups(
+            q, c, table.select("cluster_id"), max_cluster_rows_per_task,
+            counts=salt_counts,
+        )
+        return q.unionByName(c.select(*q.columns)), group_cols
+
+    def _empty_hits(self, query_id: str, id_col: str, lim: int | None) -> DataFrame:
+        """The empty range-search result: (query_id, vec_id,
+        similarity[, rank])."""
+        cols = [query_id, id_col, "similarity"]
+        if lim is not None:
+            cols = [query_id, id_col, "rank", "similarity"]
+        return self.search_empty(query_id, id_col).select(*cols)
 
     # -- search (V5 nprobe pruning + J1 top-k) --------------------------------
 
@@ -1096,24 +1255,12 @@ class IVFIndex:
                 if self.nlist() <= AUTO_DISTRIBUTED_NLIST
                 else "distributed"
             )
+        lim = None if limit_per_query is None else int(limit_per_query)
         if queries.isEmpty():
-            empty = self.search_empty(query_id, id_col)
-            cols = [query_id, id_col, "similarity"]
-            if limit_per_query is not None:
-                cols = [query_id, id_col, "rank", "similarity"]
-            return empty.select(*cols)
-        if routing == "distributed":
-            routing_df = self.route_distributed(
-                queries, nprobe, query_id, query_vec
-            ).localCheckpoint()
-            probed = [
-                r.cluster_id
-                for r in routing_df.select("cluster_id").distinct().collect()
-            ]
-        else:
-            qrows = queries.select(query_id, query_vec).collect()
-            pairs, probed = self.route(qrows, nprobe, query_id, query_vec)
-            routing_df = self.spark.createDataFrame(pairs, [query_id, "cluster_id"])
+            return self._empty_hits(query_id, id_col, lim)
+        routing_df, probed = self._route_table(
+            queries, nprobe, routing, query_id, query_vec
+        )
         q = F.broadcast(
             queries.withColumnRenamed(query_vec, "_qvec").join(routing_df, query_id)
         )
@@ -1123,17 +1270,9 @@ class IVFIndex:
             .join(q, "cluster_id")
             .withColumn("_sim", cosine_similarity(vec_col, "_qvec"))
             .filter(F.col("_sim") >= float(radius))
+            .select(F.col(query_id).alias("_qid"), F.col(id_col).alias("_cid"), "_sim")
         )
-        if limit_per_query is None:
-            return hits.select(
-                query_id, id_col, F.col("_sim").alias("similarity")
-            )
-        w = Window.partitionBy(query_id).orderBy(F.desc("_sim"), F.asc(id_col))
-        return (
-            hits.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= int(limit_per_query))
-            .select(query_id, id_col, "rank", F.col("_sim").alias("similarity"))
-        )
+        return _ranked(hits, query_id, id_col, lim)
 
     def range_search_batch(
         self,
@@ -1151,7 +1290,7 @@ class IVFIndex:
         """Range search over the index for CORPUS-SIZED query sets —
         completing the matrix: :meth:`search`/:meth:`search_batch` are
         the top-k pair, :meth:`range_search`/this the radius pair.
-        Same two distributed stages as ``search_batch`` (blocked
+        Same setup as ``search_batch`` (:meth:`_batch_union`: blocked
         centroid routing with NOTHING query-scale on the driver, then
         probed (query, cluster) pairs grouped with the cluster's rows),
         but the grouped task emits radius HITS via the shared
@@ -1164,95 +1303,31 @@ class IVFIndex:
         per-row, so salting cannot change the hit set — only the local
         cap needs the global window to re-merge). Like ``search_batch``,
         plan CONSTRUCTION may run bounded jobs (probed-set collect,
-        once-per-index stats count) — see the note there (r9 ADVICE)."""
+        once-per-index stats count) — see :meth:`_batch_union`."""
         from deployment_spark.operators.similarity import (
-            DEFAULT_BLOCK_ROWS,
             _cid_sort_kind,
             _grouped_pair_hits,
-            _maybe_salt_hot_groups,
-            topk_similarity_join_blocked,
         )
 
         lim = None if limit_per_query is None else int(limit_per_query)
         if queries.isEmpty():
-            empty = self.search_empty(query_id, id_col)
-            cols = [query_id, id_col, "similarity"]
-            if lim is not None:
-                cols = [query_id, id_col, "rank", "similarity"]
-            return empty.select(*cols)
+            return self._empty_hits(query_id, id_col, lim)
         data = self.data()
-        qid_type = queries.schema[query_id].dataType
         cid_type = data.schema[id_col].dataType
         if lim is not None:
             cid_kind = _cid_sort_kind(cid_type, "ivf batch range search with limit")
         else:
             cid_kind = "str"  # no limit ⇒ no ranking ⇒ id order never applies
-
-        # same consumer-sharing lazy checkpoint + coverage-gated
-        # unprobed-cluster pruning + metadata-fed salting + null
-        # exclusion + construction-time eagerness as search_batch —
-        # see there for the full rationale
-        probes = (
-            topk_similarity_join_blocked(
-                self.centroids_df(),
-                queries,
-                k=int(nprobe),
-                corpus_id="cluster_id",
-                corpus_vec="centroid",
-                query_id=query_id,
-                query_vec=query_vec,
-                num_query_blocks=num_query_blocks,
-                # centroid-table size is free index metadata — skip the
-                # blocked router's corpus-side sizing count (r10)
-                num_corpus_blocks=max(1, -(-self.nlist() // DEFAULT_BLOCK_ROWS)),
-            )
-            .select(query_id, "cluster_id")
-            .localCheckpoint(eager=False)
-        )
-        probed, salt_counts = self.batch_prune_plan(probes, int(nprobe))
-        data = self._apply_cluster_prune(data, probed)
-
-        q = queries.join(probes, query_id).select(
-            F.col(query_id).cast("string").alias("_qid"),
-            F.lit(None).cast("string").alias("_cid"),
-            F.col(query_vec).cast("array<double>").alias("_vec"),
-            F.col("cluster_id").alias("_g"),
-        )
-        c = data.filter(F.col(vec_col).isNotNull()).select(
-            F.lit(None).cast("string").alias("_qid"),
-            F.col(id_col).cast("string").alias("_cid"),
-            F.col(vec_col).cast("array<double>").alias("_vec"),
-            F.col("cluster_id").alias("_g"),
-        )
-        q, c, group_cols = _maybe_salt_hot_groups(
-            q, c, data.select("cluster_id"), max_cluster_rows_per_task,
-            counts=salt_counts,
+        both, group_cols = self._batch_union(
+            queries, data, nprobe, query_id, query_vec, id_col, vec_col, None,
+            num_query_blocks, max_cluster_rows_per_task,
         )
         hits = (
-            _grouped_pair_hits(
-                q.unionByName(c.select(*q.columns)), group_cols,
-                float(radius), lim, cid_kind,
-            )
-            .withColumn("_qid", F.col("_qid").cast(qid_type))
+            _grouped_pair_hits(both, group_cols, float(radius), lim, cid_kind)
+            .withColumn("_qid", F.col("_qid").cast(queries.schema[query_id].dataType))
             .withColumn("_cid", F.col("_cid").cast(cid_type))
         )
-        if lim is None:
-            return hits.select(
-                F.col("_qid").alias(query_id),
-                F.col("_cid").alias(id_col),
-                F.col("_sim").alias("similarity"),
-            )
-        w = Window.partitionBy("_qid").orderBy(F.desc("_sim"), F.asc("_cid"))
-        return (
-            hits.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= lim)
-            .select(
-                F.col("_qid").alias(query_id),
-                F.col("_cid").alias(id_col),
-                "rank",
-                F.col("_sim").alias("similarity"),
-            )
-        )
+        return _ranked(hits, query_id, id_col, lim)
 
     def search_batch(
         self,
@@ -1273,11 +1348,9 @@ class IVFIndex:
         contract for interactive batches and impossible for a 10⁶-query
         job. Here:
 
-        1. ROUTING is the blocked exact top-k over the CENTROID table
-           (``similarity.topk_similarity_join_blocked`` with k=nprobe):
-           no query broadcast, no centroid collect — scale-safe in nq
-           AND nlist simultaneously (route_distributed broadcasts the
-           query matrix; the driver router collects centroids).
+        1. ROUTING, pruning and the union frame come from
+           :meth:`_batch_union` (blocked top-k over the centroid table,
+           coverage-gated prune, metadata-fed salting).
         2. SCORING groups the probed (query, cluster) pairs WITH the
            cluster's corpus rows by cluster_id — the same union-frame
            task as the hash-blocked exact path, keyed by the index's
@@ -1303,19 +1376,12 @@ class IVFIndex:
         index itself.
 
         NOTE (r9 ADVICE): unlike a plain DataFrame transformation,
-        CONSTRUCTING this plan may run bounded Spark jobs — the probed
-        cluster-id collect behind the coverage-gated prune (≤ nlist
-        ids; skipped when nprobe itself covers ≥80% of the lists) and,
-        once per index, the cluster-stats count backing the salting
-        decision. Callers composing plans lazily or looping over
-        searches should expect that; repeated calls on an unchanged
-        index re-run only the probed collect."""
+        CONSTRUCTING this plan may run bounded Spark jobs — see
+        :meth:`_batch_union`. Repeated calls on an unchanged index
+        re-run only the probed collect."""
         from deployment_spark.operators.similarity import (
-            DEFAULT_BLOCK_ROWS,
             _cid_sort_kind,
             _grouped_pair_topk,
-            _maybe_salt_hot_groups,
-            topk_similarity_join_blocked,
         )
 
         if queries.isEmpty():
@@ -1325,83 +1391,16 @@ class IVFIndex:
         cid_type = data.schema[id_col].dataType
         cid_kind = _cid_sort_kind(cid_type, "ivf batch search")
         kk = int(k)
-
-        # localCheckpoint (lazy): the routing table feeds the query join,
-        # the prune decision AND (on a stats miss) the salting count —
-        # without it the centroid blocked top-k would re-run per
-        # consumer. Rows are nq·nprobe (qid, cluster_id) pairs — never
-        # corpus-scale.
-        probes = (
-            topk_similarity_join_blocked(
-                self.centroids_df(),
-                queries,
-                k=int(nprobe),
-                corpus_id="cluster_id",
-                corpus_vec="centroid",
-                query_id=query_id,
-                query_vec=query_vec,
-                num_query_blocks=num_query_blocks,
-                # centroid-table size is free index metadata — skip the
-                # blocked router's corpus-side sizing count (r10)
-                num_corpus_blocks=max(1, -(-self.nlist() // DEFAULT_BLOCK_ROWS)),
-            )
-            .select(query_id, "cluster_id")
-            .localCheckpoint(eager=False)
-        )
-        # prune unprobed clusters BEFORE the shuffle (r8 VERDICT #2, r10
-        # coverage gate): clusters no query touches never leave the scan
-        # (static partition filter / bounded semi-join), and when probed
-        # clusters cover ~all lists — where the prune filters nothing —
-        # its fixed overhead is skipped entirely (VERDICT r9 #1). The
-        # salting decision reads per-cluster counts from index METADATA
-        # (VERDICT r9 #2) instead of a per-call count job.
-        probed, salt_counts = self.batch_prune_plan(probes, int(nprobe))
-        data = self._apply_cluster_prune(data, probed)
-
-        q = queries.join(probes, query_id).select(
-            F.col(query_id).cast("string").alias("_qid"),
-            F.lit(None).cast("string").alias("_cid"),
-            F.col(query_vec).cast("array<double>").alias("_vec"),
-            F.col("cluster_id").alias("_g"),
-        )
-        # Null-vector rows are excluded up front: the numpy stage would
-        # crash on them, and topk_similarity_join_blocked set the
-        # contract (r8 ADVICE) — the interactive path instead ranks a
-        # null cosine last. The visible top-k matches whenever each
-        # query's probed set holds ≥ k non-null rows; in a probed set
-        # with fewer, the interactive path pads its k with null-sim
-        # rows while this route returns only the scorable ones (r9
-        # ADVICE — documented divergence, not a defect: a null vector
-        # has no defined rank).
-        c = data.filter(F.col(vec_col).isNotNull()).select(
-            F.lit(None).cast("string").alias("_qid"),
-            F.col(id_col).cast("string").alias("_cid"),
-            F.col(vec_col).cast("array<double>").alias("_vec"),
-            F.col("cluster_id").alias("_g"),
-        )
-        q, c, group_cols = _maybe_salt_hot_groups(
-            q, c, data.select("cluster_id"), max_cluster_rows_per_task,
-            counts=salt_counts,
+        both, group_cols = self._batch_union(
+            queries, data, nprobe, query_id, query_vec, id_col, vec_col, None,
+            num_query_blocks, max_cluster_rows_per_task,
         )
         candidates = (
-            _grouped_pair_topk(
-                q.unionByName(c.select(*q.columns)), group_cols, kk,
-                "cosine", cid_kind
-            )
+            _grouped_pair_topk(both, group_cols, kk, "cosine", cid_kind)
             .withColumn("_qid", F.col("_qid").cast(qid_type))
             .withColumn("_cid", F.col("_cid").cast(cid_type))
         )
-        w = Window.partitionBy("_qid").orderBy(F.desc("_sim"), F.asc("_cid"))
-        return (
-            candidates.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= kk)
-            .select(
-                F.col("_qid").alias(query_id),
-                F.col("_cid").alias(id_col),
-                "rank",
-                F.col("_sim").alias("similarity"),
-            )
-        )
+        return _ranked(candidates, query_id, id_col, kk)
 
     def search_empty(self, query_id: str, id_col: str) -> DataFrame:
         from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -1417,3 +1416,267 @@ class IVFIndex:
                 ]
             ),
         )
+
+
+class IVFCodecIndex:
+    """IVF coarse quantizer plus a codec — the scaffold of the composed
+    indexes, Milvus's IVF_PQ / IVF_SQ8 shape (``ivfpq.IVFPQIndex``,
+    ``ivfsq.IVFSQIndex``). ``root`` holds the IVFIndex layout plus a code
+    table (``codes_dir``) partitioned by the SAME cluster_id, so the
+    codes prune exactly like the full-vector lists.
+
+    The scaffold owns every step the codecs share: routing validation
+    and ``routing='batch'`` dispatch, the routing table, one
+    null-excluding read of the pruned code table per call, the shortlist
+    window, the optional exact-cosine re-rank, the range refine with its
+    ``limit_per_query`` window, and the batch route. A codec subclass
+    sets ``codes_dir``, ``code_col`` (the code column) and ``code_type``
+    (its Spark type), implements ``build``/``codec``, and supplies three
+    scoring hooks:
+
+    - ``_score(scan, queries, qrows, take, query_id, query_vec, id_col)``:
+      the interactive ADC score of the routed code rows → (_qid, _cid,
+      _sim), higher is better, holding at least each query's ``take``
+      best (the shortlist window keeps exactly those);
+    - ``_range_candidates(scan, queries, qrows, qv, radius, query_id,
+      id_col)``: the error-bounded candidate filter over the routed code
+      rows of the normalized queries → (query_id, id_col); no true hit
+      may fail it;
+    - ``_grouped_score(both, group_cols, take, cid_kind)``: the batch
+      route's grouped scorer over the :meth:`IVFIndex._batch_union`
+      frame → string-transported (_qid, _cid, _sim), tie-aware local
+      top-``take`` per (query, group).
+    """
+
+    codes_dir: str
+    code_col: str
+    code_type: str
+
+    def __init__(self, spark: SparkSession, root: str) -> None:
+        self.spark = spark
+        self.root = root
+        self.ivf = IVFIndex(spark, root)
+
+    @property
+    def _codes_path(self) -> str:
+        return os.path.join(self.root, self.codes_dir)
+
+    def codes(self) -> DataFrame:
+        return self.spark.read.parquet(self._codes_path)
+
+    def _codes_scan(self, probed: list, routing_df: DataFrame) -> DataFrame:
+        """The routed code rows of one interactive call: the code table
+        pruned to the probed partitions, null codes excluded (unscorable
+        — the family's null-tolerance contract), joined to the broadcast
+        (query_id, cluster_id) routing table so each query scores only
+        ITS lists — results never depend on which other queries share
+        the batch."""
+        return (
+            self.codes()
+            .filter(F.col("cluster_id").isin(probed))  # partition pruning
+            .filter(F.col(self.code_col).isNotNull())
+            .join(F.broadcast(routing_df), "cluster_id")  # per-query routing
+        )
+
+    def search(
+        self,
+        queries: DataFrame,
+        k: int = 5,
+        nprobe: int = 10,
+        shortlist: int | None = 50,
+        query_id: str = "query_id",
+        query_vec: str = "query_vec",
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        routing: str = "driver",
+    ) -> DataFrame:
+        """nprobe-pruned ADC search; with ``shortlist`` set, exact cosine
+        re-rank of the shortlist against the equally pruned full-vector
+        lists. Output (query_id, vec_id, rank, similarity) — similarity
+        is exact cosine when re-ranking, else the codec's ADC score
+        (queries and the encoded corpus are expected normalized).
+
+        Pruning is PER QUERY (:meth:`_codes_scan`), while the ``isin``
+        on the union still prunes partitions at the scan. ``routing``:
+        'driver' routes in numpy on the driver, 'distributed' through
+        ``IVFIndex.route_distributed`` (no centroid collect at nlist =
+        10⁴-10⁵); both collect the query batch, which the codec scorers
+        need. 'batch' dispatches to :meth:`search_batch` — the
+        corpus-scale-QUERY-set path where nothing query-scale reaches
+        the driver — mirroring ``IVFIndex.search``."""
+        if routing not in ("driver", "distributed", "batch"):
+            # fail loudly: a typo'd routing must not silently fall
+            # through to the driver collect a batch caller is avoiding
+            raise ValueError(
+                f"unknown routing {routing!r}: "
+                "expected driver | distributed | batch"
+            )
+        if routing == "batch":
+            return self.search_batch(
+                queries, k, nprobe, shortlist, query_id, query_vec,
+                id_col, vec_col,
+            )
+        qrows = queries.select(query_id, query_vec).collect()  # nq-scale
+        if not qrows:
+            return self.ivf.search_empty(query_id, id_col)
+        routing_df, probed = self.ivf._route_table(
+            queries, nprobe, routing, query_id, query_vec, qrows
+        )
+        take = int(k) if shortlist is None else max(int(shortlist), int(k))
+        cand = self._score(
+            self._codes_scan(probed, routing_df), queries, qrows, take,
+            query_id, query_vec, id_col,
+        )
+        return self._finalize(cand, k, shortlist, probed, queries, query_id,
+                              query_vec, id_col, vec_col, broadcast_queries=True)
+
+    def range_search(
+        self,
+        queries: DataFrame,
+        radius: float,
+        nprobe: int = 10,
+        query_id: str = "query_id",
+        query_vec: str = "query_vec",
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        limit_per_query: int | None = None,
+    ) -> DataFrame:
+        """ERROR-BOUNDED range search over the compressed codes: the hot
+        scan reads only codes, yet the hit set is EXACT within probed
+        clusters.
+
+        1. candidate filter (``_range_candidates``): the codec's ADC dot
+           against an error bound — IVF×PQ's per-row residual stored at
+           encode time, IVF×SQ8's per-query ``SQCodec.margin_expr`` —
+           so no true hit can fail it;
+        2. exact refine: ONLY the candidates' full vectors are fetched
+           and the final predicate is exact cosine ≥ radius —
+           quantization affects candidate COUNT, never membership or the
+           reported similarity.
+
+        Contract: the encoded corpus is expected L2-normalized (the
+        bounds are on DOT error, and dot ≡ cosine only for unit rows);
+        queries are normalized internally. At nprobe ≥ nlist the result
+        equals flat ``radius_search`` on the same rows (the hash-gated
+        ``ivfpq_range`` / ``ivfsq_range`` probes); pruning can only
+        REMOVE hits. ``limit_per_query`` caps each query's hits
+        tie-aware, Milvus-style. Output: (query_id, vec_id,
+        similarity[, rank])."""
+        from deployment_spark.functions.vector import l2_normalize
+
+        lim = None if limit_per_query is None else int(limit_per_query)
+        if queries.isEmpty():
+            return self.ivf._empty_hits(query_id, id_col, lim)
+        qn = queries.select(query_id, l2_normalize(query_vec).alias(query_vec))
+        qrows = qn.collect()  # nq-scale (interactive contract)
+        routing_df, probed = self.ivf._route_table(
+            qn, nprobe, "driver", query_id, query_vec, qrows
+        )
+        qv = F.broadcast(
+            self.spark.createDataFrame(qrows, [query_id, "_qv"]).select(
+                query_id, F.col("_qv").cast("array<double>").alias("_qv")
+            )
+        )
+        rad = float(radius)
+        cand = self._range_candidates(
+            self._codes_scan(probed, routing_df), qn, qrows, qv, rad,
+            query_id, id_col,
+        )
+        full = self.ivf.data().filter(F.col("cluster_id").isin(probed))
+        hits = (
+            cand.join(full.select(id_col, vec_col), id_col)
+            .join(qv, query_id)
+            .select(
+                F.col(query_id).alias("_qid"),
+                F.col(id_col).alias("_cid"),
+                cosine_similarity(vec_col, "_qv").alias("_sim"),
+            )
+            .filter(F.col("_sim") >= F.lit(rad))
+        )
+        return _ranked(hits, query_id, id_col, lim)
+
+    def search_batch(
+        self,
+        queries: DataFrame,
+        k: int = 5,
+        nprobe: int = 10,
+        shortlist: int | None = 50,
+        query_id: str = "query_id",
+        query_vec: str = "query_vec",
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        num_query_blocks: int | None = None,
+        max_cluster_rows_per_task: int | None = DEFAULT_SALT_BOUND,
+    ) -> DataFrame:
+        """Search for CORPUS-SIZED query sets — NOTHING query-scale on
+        the driver (``search`` collects the query batch for its
+        scorers, the right interactive contract and impossible for a
+        10⁶-query job). Same stages as ``IVFIndex.search_batch``:
+
+        1. routing, pruning and the union frame from
+           :meth:`IVFIndex._batch_union`, whose corpus side carries the
+           cluster's CODE rows — the shuffle moves codes, not float
+           vectors, which is what makes the corpus×query-batch shuffle
+           affordable;
+        2. the codec's grouped scorer ranks each probed cluster's codes
+           for its queries;
+        3. the shortlist window and optional exact-cosine re-rank of
+           :meth:`search`, fetching ONLY the shortlist ids from the
+           full-vector lists (shuffle join — no query broadcast).
+
+        ``max_cluster_rows_per_task`` salts hot clusters exactly as in
+        ``IVFIndex.search_batch``. Output schema and tie-breaks
+        identical to :meth:`search`."""
+        from deployment_spark.operators.similarity import _cid_sort_kind
+
+        if queries.isEmpty():
+            return self.ivf.search_empty(query_id, id_col)
+        codes = self.codes()
+        cid_type = codes.schema[id_col].dataType
+        cid_kind = _cid_sort_kind(cid_type, f"{type(self).__name__} batch search")
+        take = int(k) if shortlist is None else max(int(shortlist), int(k))
+        both, group_cols = self.ivf._batch_union(
+            queries, codes, nprobe, query_id, query_vec, id_col,
+            self.code_col, self.code_type, num_query_blocks,
+            max_cluster_rows_per_task,
+        )
+        cand = (
+            self._grouped_score(both, group_cols, take, cid_kind)
+            .withColumn("_qid", F.col("_qid").cast(queries.schema[query_id].dataType))
+            .withColumn("_cid", F.col("_cid").cast(cid_type))
+        )
+        return self._finalize(cand, k, shortlist, None, queries, query_id,
+                              query_vec, id_col, vec_col, broadcast_queries=False)
+
+    def _finalize(
+        self, cand, k, shortlist, probed, queries, query_id, query_vec,
+        id_col, vec_col, broadcast_queries,
+    ) -> DataFrame:
+        """Shared tail of the interactive and batch searches: the
+        shortlist window over the ADC scores, then the optional
+        exact-cosine re-rank against the full-vector lists. ``probed``
+        (interactive only) prunes the full-vector scan; the batch route
+        passes None — its shortlist ids alone drive the semi-join-shaped
+        fetch. ``broadcast_queries`` is the contract split: the
+        interactive query batch is nq-scale driver state already, the
+        batch route's query set must shuffle-join instead."""
+        if shortlist is None:
+            return _ranked(cand, query_id, id_col, int(k))
+        short = _ranked(cand, query_id, id_col, max(int(shortlist), int(k)))
+        full = self.ivf.data()
+        if probed is not None:
+            full = full.filter(F.col("cluster_id").isin(probed))
+        q = queries.select(query_id, F.col(query_vec).alias("_qv"))
+        if broadcast_queries:
+            q = F.broadcast(q)
+        scored = (
+            short.select(query_id, id_col)
+            .join(full.select(id_col, vec_col), id_col)
+            .join(q, query_id)
+            .select(
+                F.col(query_id).alias("_qid"),
+                F.col(id_col).alias("_cid"),
+                cosine_similarity(vec_col, "_qv").alias("_sim"),
+            )
+        )
+        return _ranked(scored, query_id, id_col, int(k))

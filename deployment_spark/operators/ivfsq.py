@@ -6,19 +6,18 @@ Milvus index-type parity: FLAT ≡ exact, IVF_FLAT ≡ operators/ivf,
 IVF_PQ ≡ operators/ivfpq, IVF_SQ8 ≡ here; HNSW is serving-side, out of
 Spark scope per SURVEY §2.9).
 
-Composition of two existing pieces, not a re-implementation:
+The routing, pruning, shortlist, re-rank, range refine and batch route
+are the shared ``ivf.IVFCodecIndex`` scaffold; this module holds only
+what is SQ8's:
 
 - build: ``IVFIndex.build`` trains the coarse quantizer and writes the
   full-vector lists; ``SQCodec.train`` (distributed min/max) +
   ``encode`` writes a parallel ``sq_codes/`` table partitioned by the
-  SAME cluster_id — 1 B/dim instead of 4, pruned identically.
-- search: centroid routing (driver-side, FAISS contract) → ``isin``
-  partition pruning on the codes table → per-query routing join →
-  decode-on-the-fly ADC **entirely inside whole-stage codegen** (the
-  SQ decode is a transform expression + dot product; contrast IVF×PQ,
-  whose LUT gather needs an Arrow mapInPandas stage) → shortlist →
-  optional exact cosine re-rank joining only the shortlist back to the
-  (equally pruned) full-vector lists.
+  SAME cluster_id — 1 B/dim instead of 4, pruned identically;
+- score: decode-on-the-fly ADC **entirely inside whole-stage codegen**
+  (the SQ decode is a transform expression + dot product; contrast
+  IVF×PQ, whose LUT gather needs an Arrow mapInPandas stage);
+- range bound: the quantizer's per-query dot-product error margin.
 
 Why this exists next to IVF×PQ at the 100 TB design point: SQ8 is 4×
 (vs PQ's 16-48×) but near-lossless, so the composed recall is bounded
@@ -36,28 +35,21 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deployment_spark.operators.ivf import IVFIndex
-from deployment_spark.operators.similarity import (
-    DEFAULT_MAX_CLUSTER_ROWS_PER_TASK as DEFAULT_SALT_BOUND,
-)
+from deployment_spark.functions.vector import dot_product
+from deployment_spark.operators.ivf import IVFCodecIndex
 from deployment_spark.operators.sq import SQCodec
 
 
-class IVFSQIndex:
+class IVFSQIndex(IVFCodecIndex):
     """root/ holds the IVFIndex layout plus ``sq_codes/cluster_id=*``
     and ``sq_ranges.json``."""
 
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        self.spark = spark
-        self.root = root
-        self.ivf = IVFIndex(spark, root)
-
-    @property
-    def _codes_path(self) -> str:
-        return os.path.join(self.root, "sq_codes")
+    codes_dir = "sq_codes"
+    code_col = "codes"
+    code_type = "array<tinyint>"
 
     @property
     def _ranges_path(self) -> str:
@@ -86,305 +78,42 @@ class IVFSQIndex:
         with open(self._ranges_path) as f:
             return SQCodec.from_json(f.read())
 
-    def codes(self) -> DataFrame:
-        return self.spark.read.parquet(self._codes_path)
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int = 5,
-        nprobe: int = 10,
-        shortlist: int | None = 50,
-        query_id: str = "query_id",
-        query_vec: str = "query_vec",
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        routing: str = "driver",
-    ) -> DataFrame:
-        """nprobe-pruned pure-Catalyst ADC; with ``shortlist`` set, exact
-        cosine re-rank against the equally pruned full-vector lists.
-        Output (query_id, vec_id, rank, similarity) — similarity is
-        exact cosine when re-ranking, else the ADC dot product (queries
-        and the encoded corpus are expected normalized).
-
-        Pruning is PER QUERY (shared routing helper with IVFIndex): each
-        query scores only codes in ITS nprobe lists, while the ``isin``
-        on the union still prunes partitions at the scan.
-
-        ``routing='batch'`` dispatches to :meth:`search_batch` — the
-        corpus-scale-QUERY-set path where nothing query-scale reaches
-        the driver — mirroring ``IVFIndex.search``."""
-        from deployment_spark.functions.vector import cosine_similarity, dot_product
-
-        if routing not in ("driver", "distributed", "batch"):
-            # fail loudly: a typo'd routing must not silently fall
-            # through to the driver collect a batch caller is avoiding
-            raise ValueError(
-                f"unknown routing {routing!r}: "
-                "expected driver | distributed | batch"
-            )
-        if routing == "batch":
-            # explicit corpus-scale-queries dispatch (r8): no count job,
-            # no query collect on this path — batch callers know they
-            # are batch (same reasoning as IVFIndex.search)
-            return self.search_batch(
-                queries, k, nprobe, shortlist, query_id, query_vec,
-                id_col, vec_col,
-            )
-        qrows = queries.select(query_id, query_vec).collect()  # nq-scale
-        if not qrows:
-            return self.ivf.search_empty(query_id, id_col)
-        # 'distributed' routes through IVFIndex.route_distributed — no
-        # centroid collect at nlist = 10^4-10^5; only the nq×nprobe
-        # probed ids reach the driver (the queries themselves are
-        # already nq-scale driver state by the LUT/codec contract)
-        if routing == "distributed":
-            routing_df = self.ivf.route_distributed(
-                queries, nprobe, query_id, query_vec
-            ).localCheckpoint()
-            probed = [
-                r.cluster_id
-                for r in routing_df.select("cluster_id").distinct().collect()
-            ]
-        else:
-            pairs, probed = self.ivf.route(qrows, nprobe, query_id, query_vec)
-            routing_df = self.spark.createDataFrame(pairs, [query_id, "cluster_id"])
-        codec = self.codec()
-        take = k if shortlist is None else max(int(shortlist), k)
-
-        pruned = (
-            self.codes()
-            .filter(F.col("cluster_id").isin(probed))  # partition pruning
-            .join(F.broadcast(routing_df), "cluster_id")  # per-query routing
-        )
+    def _score(self, scan, queries, qrows, take, query_id, query_vec, id_col):
+        """Pure-Catalyst ADC: the dot product of each query with its
+        routed rows' ``decode_expr`` — no Python stage in the plan."""
         qv = F.broadcast(queries.select(query_id, F.col(query_vec).alias("_qv")))
-        scored = (
-            pruned.join(qv, query_id)
-            .withColumn("_sim", dot_product(codec.decode_expr("codes"), "_qv"))
-            .select(query_id, F.col(id_col).alias("_cid"), "_sim")
-        )
-        w = Window.partitionBy(query_id).orderBy(F.desc("_sim"), F.asc("_cid"))
-        short = scored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= take
-        )
-        if shortlist is None:
-            return short.filter(F.col("rank") <= k).select(
-                query_id,
-                F.col("_cid").alias(id_col),
-                "rank",
-                F.col("_sim").alias("similarity"),
-            )
-        full = self.ivf.data().filter(F.col("cluster_id").isin(probed)).select(
-            id_col, vec_col
-        )
-        rescored = (
-            short.select(query_id, F.col("_cid").alias(id_col))
-            .join(full, id_col)
-            .join(qv, query_id)
-            .withColumn("_sim", cosine_similarity(vec_col, "_qv"))
-        )
-        w2 = Window.partitionBy(query_id).orderBy(F.desc("_sim"), F.asc(id_col))
-        return (
-            rescored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select(query_id, id_col, "rank", F.col("_sim").alias("similarity"))
+        return scan.join(qv, query_id).select(
+            F.col(query_id).alias("_qid"),
+            F.col(id_col).alias("_cid"),
+            dot_product(self.codec().decode_expr("codes"), "_qv").alias("_sim"),
         )
 
-    def range_search(
-        self,
-        queries: DataFrame,
-        radius: float,
-        nprobe: int = 10,
-        query_id: str = "query_id",
-        query_vec: str = "query_vec",
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        limit_per_query: int | None = None,
-    ) -> DataFrame:
-        """ERROR-BOUNDED range search over the COMPRESSED codes (r9) —
-        the radius sibling of :meth:`search`, completing the composed
-        index's {top-k, range} matrix. The hot scan reads 1 B/dim codes
-        (4× less IO than the float lists), yet the hit set is EXACT
-        within probed clusters, not approximately-ADC:
-
-        1. candidate filter (pure codegen, pruned codes scan): ADC dot
-           ≥ radius − margin(q) − ε, where margin(q) =
-           Σ|q_i|·scale_i/2 is the quantizer's tight dot-product error
-           bound (``SQCodec.margin_expr``) and ε=1e-9 absorbs float
-           rounding. No true hit can fail this: exact ≥ radius ⇒
-           ADC ≥ exact − margin ≥ radius − margin.
-        2. exact refine: ONLY the candidates' full vectors are fetched
-           (the search_rerank shape) and the final predicate is exact
-           cosine ≥ radius — quantization affects candidate COUNT,
-           never membership or reported similarity.
-
-        Contract: the encoded corpus is expected L2-normalized (same
-        as ``search``; the margin bounds DOT error, and dot ≡ cosine
-        only for unit corpus rows — queries are normalized internally,
-        cosine being scale-invariant in the query). At nprobe ≥ nlist
-        the result equals flat ``radius_search`` on the same rows —
-        the SQL-gateable operating point. ``limit_per_query`` caps
-        each query's hits tie-aware, Milvus-style. Output:
-        (query_id, vec_id, similarity[, rank])."""
-        from deployment_spark.functions.vector import (
-            cosine_similarity,
-            dot_product,
-            l2_normalize,
-        )
-
-        qrows_empty = queries.isEmpty()
-        lim = None if limit_per_query is None else int(limit_per_query)
-        if qrows_empty:
-            empty = self.ivf.search_empty(query_id, id_col)
-            cols = [query_id, id_col, "similarity"]
-            if lim is not None:
-                cols = [query_id, id_col, "rank", "similarity"]
-            return empty.select(*cols)
-        qn = queries.select(
-            query_id, l2_normalize(query_vec).alias(query_vec)
-        )
-        qrows = qn.collect()  # nq-scale (interactive contract)
-        pairs, probed = self.ivf.route(qrows, nprobe, query_id, query_vec)
-        routing_df = self.spark.createDataFrame(pairs, [query_id, "cluster_id"])
+    def _range_candidates(self, scan, queries, qrows, qv, radius, query_id, id_col):
+        """Candidate filter (pure codegen): ADC dot ≥ radius −
+        margin(q) − ε, where margin(q) = Σ|q_i|·scale_i/2 is the
+        quantizer's tight dot-product error bound
+        (``SQCodec.margin_expr``) and ε=1e-9 absorbs float rounding. No
+        true hit can fail this: exact ≥ radius ⇒ ADC ≥ exact − margin ≥
+        radius − margin."""
         codec = self.codec()
-
-        qv = F.broadcast(
-            self.spark.createDataFrame(qrows, [query_id, "_qv"]).select(
-                query_id,
-                F.col("_qv").cast("array<double>").alias("_qv"),
-                codec.margin_expr("_qv").alias("_margin"),
-            )
-        )
-        cand = (
-            self.codes()
-            .filter(F.col("cluster_id").isin(probed))  # partition pruning
-            .join(F.broadcast(routing_df), "cluster_id")  # per-query routing
-            .join(qv, query_id)
-            .withColumn("_adc", dot_product(codec.decode_expr("codes"), "_qv"))
+        qm = F.broadcast(qv.select(query_id, "_qv", codec.margin_expr("_qv").alias("_margin")))
+        return (
+            scan.join(qm, query_id)
             .filter(
-                F.col("_adc")
-                >= F.lit(float(radius)) - F.col("_margin") - F.lit(1e-9)
+                dot_product(codec.decode_expr("codes"), "_qv")
+                >= F.lit(radius) - F.col("_margin") - F.lit(1e-9)
             )
-            .select(query_id, id_col, "_qv")
-        )
-        full = self.ivf.data().filter(F.col("cluster_id").isin(probed)).select(
-            id_col, vec_col
-        )
-        hits = (
-            cand.join(full, id_col)
-            .withColumn("similarity", cosine_similarity(vec_col, "_qv"))
-            .filter(F.col("similarity") >= F.lit(float(radius)))
-        )
-        if lim is None:
-            return hits.select(query_id, id_col, "similarity")
-        w = Window.partitionBy(query_id).orderBy(
-            F.desc("similarity"), F.asc(id_col)
-        )
-        return (
-            hits.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= lim)
-            .select(query_id, id_col, "rank", "similarity")
+            .select(query_id, id_col)
         )
 
-    def search_batch(
-        self,
-        queries: DataFrame,
-        k: int = 5,
-        nprobe: int = 10,
-        shortlist: int | None = 50,
-        query_id: str = "query_id",
-        query_vec: str = "query_vec",
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        num_query_blocks: int | None = None,
-        max_cluster_rows_per_task: int | None = DEFAULT_SALT_BOUND,
-    ) -> DataFrame:
-        """IVF×SQ8 search for CORPUS-SIZED query sets — NOTHING
-        query-scale on the driver (``search`` collects the query batch
-        for routing and broadcasts it into the ADC join, the right
-        interactive contract). Same three stages as
-        ``IVFIndex.search_batch``:
+    def _grouped_score(self, both, group_cols, take, cid_kind):
+        """Batch ADC: each grouped task decodes its code block with the
+        numpy image of ``decode_expr`` (bit-identical float64 values)
+        and runs one dot-product matmul; scores differ from the
+        expression path only in summation-order ulps."""
+        from deployment_spark.operators.similarity import _grouped_pair_topk
 
-        1. ROUTING: blocked exact top-k over the centroid table
-           (k=nprobe) — no query broadcast, no centroid collect;
-        2. ADC: probed (query, cluster) pairs group WITH the cluster's
-           1 B/dim code rows by cluster_id; each task decodes its code
-           block with the numpy image of ``decode_expr`` (bit-identical
-           float64 values) and runs one dot-product matmul — the
-           shuffle carries codes, not floats (the 4× SQ compression is
-           what the corpus-side replication pays);
-        3. optional exact-cosine re-rank fetching ONLY the shortlist
-           ids from the full-vector lists (shuffle join — no query
-           broadcast).
-
-        ``max_cluster_rows_per_task`` opts into the same hot-cluster
-        sub-block salting as the other batch searchers. Output schema
-        and tie-breaks identical to :meth:`search` (ADC scores differ
-        from the expression path only in summation-order ulps)."""
-        from deployment_spark.operators.similarity import (
-            DEFAULT_BLOCK_ROWS,
-            _cid_sort_kind,
-            _grouped_pair_topk,
-            topk_similarity_join_blocked,
-        )
-
-        if queries.isEmpty():
-            return self.ivf.search_empty(query_id, id_col)
-        codes = self.codes()
         codec = self.codec()
-        qid_type = queries.schema[query_id].dataType
-        cid_type = codes.schema[id_col].dataType
-        cid_kind = _cid_sort_kind(cid_type, "ivfsq batch search")
-        take = int(k) if shortlist is None else max(int(shortlist), int(k))
-
-        # lazy checkpoint + coverage-gated unprobed-cluster pruning (r10;
-        # counts are the IVF layout's metadata — the codes table carries
-        # the same per-cluster rows) + null-code exclusion, same
-        # rationale as IVFIndex.search_batch: a null codes array would
-        # crash the np.array(...tolist()) decode inside the scoring task
-        # (r8 ADVICE). Like there, plan CONSTRUCTION may run bounded
-        # jobs (probed collect; once-per-index stats count) — r9 ADVICE.
-        probes = (
-            topk_similarity_join_blocked(
-                self.ivf.centroids_df(),
-                queries,
-                k=int(nprobe),
-                corpus_id="cluster_id",
-                corpus_vec="centroid",
-                query_id=query_id,
-                query_vec=query_vec,
-                num_query_blocks=num_query_blocks,
-                # centroid-table size is free index metadata — skip the
-                # blocked router's corpus-side sizing count (r10)
-                num_corpus_blocks=max(1, -(-self.ivf.nlist() // DEFAULT_BLOCK_ROWS)),
-            )
-            .select(query_id, "cluster_id")
-            .localCheckpoint(eager=False)
-        )
-        probed, salt_counts = self.ivf.batch_prune_plan(probes, int(nprobe))
-        codes = self.ivf._apply_cluster_prune(codes, probed)
-
-        q = queries.join(probes, query_id).select(
-            F.col(query_id).cast("string").alias("_qid"),
-            F.lit(None).cast("string").alias("_cid"),
-            F.col(query_vec).cast("array<double>").alias("_vec"),
-            F.lit(None).cast("array<tinyint>").alias("_code"),
-            F.col("cluster_id").alias("_g"),
-        )
-        c = codes.filter(F.col("codes").isNotNull()).select(
-            F.lit(None).cast("string").alias("_qid"),
-            F.col(id_col).cast("string").alias("_cid"),
-            F.lit(None).cast("array<double>").alias("_vec"),
-            F.col("codes").alias("_code"),
-            F.col("cluster_id").alias("_g"),
-        )
-        from deployment_spark.operators.similarity import _maybe_salt_hot_groups
-
-        q, c, group_cols = _maybe_salt_hot_groups(
-            q, c, codes.select("cluster_id"), max_cluster_rows_per_task,
-            counts=salt_counts,
-        )
-
         lo, scale = codec.lo, codec.scale
 
         def decode_codes(cp):
@@ -393,38 +122,6 @@ class IVFSQIndex:
             arr = np.array(cp["_code"].tolist(), dtype=np.float64)
             return lo + (arr + 128.0) * scale
 
-        cand = (
-            _grouped_pair_topk(
-                q.unionByName(c.select(*q.columns)), group_cols, take,
-                "dot", cid_kind, corpus_decode=decode_codes,
-            )
-            .withColumn("_qid", F.col("_qid").cast(qid_type))
-            .withColumn("_cid", F.col("_cid").cast(cid_type))
-        )
-        w = Window.partitionBy("_qid").orderBy(F.desc("_sim"), F.asc("_cid"))
-        short = cand.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= take
-        )
-        if shortlist is None:
-            return short.filter(F.col("rank") <= k).select(
-                F.col("_qid").alias(query_id),
-                F.col("_cid").alias(id_col),
-                "rank",
-                F.col("_sim").alias("similarity"),
-            )
-        from deployment_spark.functions.vector import cosine_similarity
-
-        full = self.ivf.data().select(id_col, vec_col)
-        qv = queries.select(query_id, F.col(query_vec).alias("_qv"))
-        rescored = (
-            short.select(F.col("_qid").alias(query_id), F.col("_cid").alias(id_col))
-            .join(full, id_col)
-            .join(qv, query_id)
-            .withColumn("_sim", cosine_similarity(vec_col, "_qv"))
-        )
-        w2 = Window.partitionBy(query_id).orderBy(F.desc("_sim"), F.asc(id_col))
-        return (
-            rescored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select(query_id, id_col, "rank", F.col("_sim").alias("similarity"))
+        return _grouped_pair_topk(
+            both, group_cols, take, "dot", cid_kind, corpus_decode=decode_codes
         )

@@ -216,6 +216,10 @@ def test_search_batch_tolerates_null_codes(spark, norm_emb, tmp_path):
         (r.query_id, r.rank): r.vec_id
         for r in idx.search_batch(q, k=3, nprobe=4).collect()
     }
+    before_search = {
+        sl: sorted(map(tuple, idx.search(q, k=3, nprobe=4, shortlist=sl).collect()))
+        for sl in (None, 50)
+    }
     schema = idx.codes().schema
     null_row = spark.createDataFrame(
         [tuple(999_999 if f.name == "vec_id" else (0 if f.name == "cluster_id" else None) for f in schema.fields)],
@@ -229,6 +233,30 @@ def test_search_batch_tolerates_null_codes(spark, norm_emb, tmp_path):
         for r in idx.search_batch(q, k=3, nprobe=4).collect()
     }
     assert after == before
+    # the interactive route excludes it too (a null code would crash
+    # its LUT gather)
+    after_search = {
+        sl: sorted(map(tuple, idx.search(q, k=3, nprobe=4, shortlist=sl).collect()))
+        for sl in (None, 50)
+    }
+    assert after_search == before_search
+
+
+def test_adc_only_full_probe_equals_flat_codec(index, queries):
+    """At full probe with no shortlist the composed index's ADC route is
+    the flat codec's: the same (query_id, rank, vec_id) as
+    ``PQCodec.search`` over the same codes, and the similarity is the
+    negated ADC distance bit for bit."""
+    got = {
+        (r.query_id, r.rank): (r.vec_id, r.similarity.hex())
+        for r in index.search(queries, k=10, nprobe=100, shortlist=None).collect()
+    }
+    flat = {
+        (r.query_id, r.rank): (r.vec_id, (-r.adc_distance).hex())
+        for r in index.codec().search(index.codes(), queries, k=10).collect()
+    }
+    assert got == flat
+    assert len(got) == 10 * queries.count()
 
 
 def test_range_search_exact_vs_flat_and_margin_load_bearing(

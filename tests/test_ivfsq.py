@@ -206,6 +206,10 @@ def test_search_batch_tolerates_null_codes(spark, norm_emb, tmp_path):
         (r.query_id, r.rank): r.vec_id
         for r in idx.search_batch(q, k=3, nprobe=4).collect()
     }
+    before_search = {
+        sl: sorted(map(tuple, idx.search(q, k=3, nprobe=4, shortlist=sl).collect()))
+        for sl in (None, 50)
+    }
     null_row = spark.createDataFrame([(999_999, None, 0)], idx.codes().schema)
     null_row.write.mode("append").partitionBy("cluster_id").parquet(
         str(tmp_path / "sqnull" / "sq_codes")
@@ -215,6 +219,28 @@ def test_search_batch_tolerates_null_codes(spark, norm_emb, tmp_path):
         for r in idx.search_batch(q, k=3, nprobe=4).collect()
     }
     assert after == before
+    after_search = {
+        sl: sorted(map(tuple, idx.search(q, k=3, nprobe=4, shortlist=sl).collect()))
+        for sl in (None, 50)
+    }
+    assert after_search == before_search
+
+
+def test_adc_only_full_probe_equals_flat_codec(index, queries):
+    """At full probe with no shortlist the composed index's ADC route is
+    the flat codec's: the same (query_id, rank, vec_id) and similarity,
+    bit for bit, as ``SQCodec.search`` over the same codes (both score
+    with the same decode + dot-product expression)."""
+    got = {
+        (r.query_id, r.rank): (r.vec_id, r.similarity.hex())
+        for r in index.search(queries, k=10, nprobe=100, shortlist=None).collect()
+    }
+    flat = {
+        (r.query_id, r.rank): (r.vec_id, r.similarity.hex())
+        for r in index.codec().search(index.codes(), queries, k=10).collect()
+    }
+    assert got == flat
+    assert len(got) == 10 * queries.count()
 
 
 def test_range_search_full_probe_equals_flat_radius(norm_emb, index, queries):
